@@ -16,15 +16,18 @@ Physical tuning vs the plain spec functions in rules.py:
     literals — no broadcast-join exchange for costs.
   - the final rule base is collected to the driver (bounded by the
     data-touched subset of L^d cells; L=3,d=4 -> <= 81 rules; the
-    reference's models are the same size) and re-emitted as a
-    LITERAL DataFrame, so transform() is a pure broadcast equi-join
-    on the cell key with no recomputation of the build lineage (the
-    Spark-native shape of the reference's DistributedCache model
-    shipping; see the measured note in transform_fuzzified for why
-    plan-literal map-only variants lose to this join).
+    reference's models are the same size), so transform() is the
+    map-only numpy kernel (_RuleKernel) with the rule arrays in the
+    task closure — the reference's DistributedCache model shipping —
+    and no recomputation of the build lineage, while the rule base is
+    within the measured kernel-vs-join crossover (R <= 16 * 2^d).
+    (The measured note in transform_fuzzified is about plan-literal
+    EXPRESSION scorers, which lose to the join; the kernel is batch
+    numpy.)
   - for very high-d problems construct the ESTIMATOR with
     collect_rules=False: fit() materializes the rule base as a
-    persisted DataFrame instead and transform() broadcast-joins it.
+    persisted DataFrame instead and transform() runs the
+    cell-explosion scorer, broadcast-joining it.
     NOTE: "distributed" here bounds the DRIVER PYTHON process only —
     Spark's broadcast still materializes the rule base in the JVM;
     for rule bases too large to broadcast, swap the broadcast hint
@@ -45,6 +48,7 @@ import json
 import os
 from dataclasses import dataclass, field
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -99,53 +103,142 @@ def should_broadcast_rules(
     return estimated_rule_bytes(n_rules, n_features) <= budget_bytes
 
 
-def _mu_per_rule(pdf, d, feat_names, kinds, Ls, peaks, hws, rl):
-    """n x R membership-product matrix — the shared numpy core of
-    transform_pandas and ac_cscores_pandas. Evaluates the identical
-    IEEE chain as fuzzify + the cell mu product (pinned by the
-    pandas-scorer parity tests)."""
-    import numpy as np
+# Kernel-vs-join crossover. Per example the kernel does R*d work (R
+# rules, d features) where the join scorer expands 2^d cells, so the
+# kernel is chosen only while R <= _KERNEL_RULES_PER_CELL * 2^d.
+# Measured on a 4-core VM (local[4], 50k rows, random rule bases), the
+# kernel's share of the broadcast join's time: d=4 0.25-0.30 up to
+# R/2^d = 62, 1.09 at 250; d=8 0.11 / 0.25 / 0.65 / 2.72 / 7.62 at
+# R/2^d = 1 / 4 / 16 / 64 / 256. 16 keeps the kernel ahead at both.
+_KERNEL_RULES_PER_CELL = 16
 
-    n = len(pdf)
-    mu = np.ones((n, rl.shape[0]))
-    for k in range(d):
-        x = pdf[feat_names[k]].to_numpy(dtype=np.float64)[:, None]
-        L = Ls[k]
-        if kinds[k] == "nominal":
-            # crisp indicator: mu = 1 iff encoded value == j
-            m = (x[:, 0:1] == np.arange(L)[None, :]).astype(np.float64)
-        else:
-            p = peaks[k][None, :]
-            h = hws[k]
-            m = np.empty((n, L))
-            m[:, 0] = np.maximum(
-                0.0, np.minimum(1.0, 1.0 - (x[:, 0] - p[0, 0]) / h)
+
+def _kernel_beats_join(n_rules: int, n_features: int) -> bool:
+    """Auto-mode choice of the numpy kernel over the join scorer for a
+    driver-resident rule base: cheaper per example, and small enough
+    to ride in the task closure."""
+    return n_rules <= _KERNEL_RULES_PER_CELL * 2**n_features and (
+        should_broadcast_rules(n_rules, n_features)
+    )
+
+
+# Per-task memory bound of the numpy kernel: every Arrow batch is
+# scored in row slices whose n x R membership-product matrix stays
+# within this many bytes, whatever the rule count R (the reducers hold
+# a few temporaries of the same shape).
+_KERNEL_CHUNK_BYTES = 16 << 20
+
+
+class _RuleKernel:
+    """The numpy rule-scoring kernel, shipped to tasks in the
+    mapInPandas closure: the positive-weight rules as arrays sorted by
+    (l1..ld, cls), plus the feature partitions. Evaluates the
+    identical IEEE chain as fuzzify + the cell mu product of the join
+    scorer (pinned by the scorer parity tests)."""
+
+    def __init__(self, parts: FuzzyPartitions, rules_rows: list[tuple]):
+        d = len(parts.features)
+        rules = sorted(r for r in rules_rows if r[d + 1] > 0)
+        self.rl = np.array([r[:d] for r in rules], dtype=np.int64).reshape(-1, d) - 1
+        self.rcls = np.array([r[d] for r in rules], dtype=np.int64)
+        self.rw = np.array([r[d + 1] for r in rules], dtype=np.float64)
+        self.classes = sorted(set(self.rcls.tolist()))
+        self.features = [
+            (
+                f.name,
+                f.kind,
+                parts.labels_for(f),
+                np.array(parts.peaks(f)) if f.kind == "numeric" else None,
+                parts.half_width(f) if f.kind == "numeric" else None,
             )
-            for j in range(1, L - 1):
-                m[:, j] = np.maximum(
-                    0.0, 1.0 - np.abs(x[:, 0] - p[0, j]) / h
+            for f in parts.features
+        ]
+        self.chunk_rows = max(1, _KERNEL_CHUNK_BYTES // (8 * max(1, len(rules))))
+
+    def chunks(self, pdf):
+        """(row slice, n x R membership-product matrix) per chunk of an
+        Arrow batch, chunk_rows rows at a time."""
+        xs = [pdf[name].to_numpy(dtype=np.float64) for name, *_ in self.features]
+        for s in range(0, len(pdf), self.chunk_rows):
+            sl = slice(s, s + self.chunk_rows)
+            yield sl, self._mu([x[sl] for x in xs])
+
+    def _mu(self, xs):
+        n = len(xs[0])
+        mu = np.ones((n, len(self.rw)))
+        for k, (_, kind, L, peaks, h) in enumerate(self.features):
+            x = xs[k]
+            if kind == "nominal":
+                # crisp indicator: mu = 1 iff encoded value == j
+                m = (x[:, None] == np.arange(L)[None, :]).astype(np.float64)
+            else:
+                m = np.empty((n, L))
+                m[:, 0] = np.maximum(0.0, np.minimum(1.0, 1.0 - (x - peaks[0]) / h))
+                for j in range(1, L - 1):
+                    m[:, j] = np.maximum(0.0, 1.0 - np.abs(x - peaks[j]) / h)
+                m[:, L - 1] = np.maximum(
+                    0.0, np.minimum(1.0, 1.0 - (peaks[L - 1] - x) / h)
                 )
-            m[:, L - 1] = np.maximum(
-                0.0, np.minimum(1.0, 1.0 - (p[0, L - 1] - x[:, 0]) / h)
-            )
-        mu = mu * m[:, rl[:, k]]
-    return mu
+                m[np.isnan(x)] = 0.0  # missing (null arrives as NaN)
+            mu = mu * m[:, self.rl[:, k]]
+        return mu
+
+    def class_scores(self, mu):
+        """AC per class, ascending: (cls, matched, cscore). matched
+        marks rows with a rule of the class at mu > 0; cscore =
+        round(sum of mu*weight over those rules, 9), 0.0 where
+        unmatched — the join scorer's per-(id, class) sum over exactly
+        the same contributing set."""
+        contrib = np.where(mu > 0, mu * self.rw[None, :], 0.0)
+        for c in self.classes:
+            sel = self.rcls == c
+            matched = (mu[:, sel] > 0).any(axis=1)
+            cs = np.where(matched, np.round(contrib[:, sel].sum(axis=1), 9), 0.0)
+            yield c, matched, cs
+
+    def predict_wr(self, mu, default_cls: int):
+        """Winning rule: highest mu*weight; ties -> lowest (l1..ld,
+        cls) (np.argmax takes the first max over the sorted rule
+        axis); no matched rule -> default_cls."""
+        if not len(self.rw):
+            return np.full(len(mu), default_cls, dtype=np.int64)
+        scores = np.where(mu > 0, mu * self.rw[None, :], -np.inf)
+        best = np.argmax(scores, axis=1)
+        top = scores[np.arange(len(mu)), best]
+        return np.where(np.isneginf(top), default_cls, self.rcls[best])
+
+    def predict_ac(self, mu, default_cls: int):
+        """Additive combination: highest class score; ties -> lowest
+        class (classes ascend, a tie never replaces); no matched
+        class -> default_cls."""
+        pred = np.full(len(mu), default_cls, dtype=np.int64)
+        best = np.full(len(mu), -np.inf)
+        for c, matched, cs in self.class_scores(mu):
+            win = matched & (cs > best)
+            pred = np.where(win, c, pred)
+            best = np.where(win, cs, best)
+        return pred
+
+
+def _kernel_input(df: DataFrame, parts: FuzzyPartitions) -> DataFrame:
+    """Only the columns the kernel reads cross into the Arrow batches."""
+    return df.select("id", "label", *[f.name for f in parts.features])
 
 
 def ac_per_example_pandas(
     df: DataFrame, parts: FuzzyPartitions, rules_rows: list[tuple]
 ) -> DataFrame:
     """Per-EXAMPLE additive-combination score stats via the numpy
-    membership core: emits (id, label, ssum, c1, ss2, chit) — the
-    folds every AC metrics key aggregates — without the cell
-    explosion, the broadcast rule join, or ANY exchange (each example
-    is one input row, so both the per-class sums and the per-id folds
-    over them stay inside the row's batch).
+    kernel: emits (id, label, ssum, c1, ss2, chit) — the folds every
+    AC metrics key aggregates — without the cell explosion, the
+    broadcast rule join, or ANY exchange (each example is one input
+    row, so both the per-class sums and the per-id folds over them
+    stay inside the row's batch).
 
-    Per class, cscore = round(sum of mu*weight over the class's rules
-    with mu > 0, 9) — exactly the join path's contributing set; a
-    class with no matched rule contributes nothing (the inner join's
-    contract), and an example with no matched class emits no row.
+    The per-class scores are _RuleKernel.class_scores, the very sums
+    transform() takes the AC argmax over: a class with no matched
+    rule contributes nothing (the inner join's contract), and an
+    example with no matched class emits no row.
     The per-id folds over the ROUNDED class scores:
       ssum = sum(cscore_c), ss2 = sum(cscore_c^2),
       c1 = cscore of class 1 (0.0 absent), chit = cscore of the
@@ -155,68 +248,44 @@ def ac_per_example_pandas(
     the checked-SF verifies cover the class sums themselves, whose
     join-path partial aggregation already summed in
     partition-arbitrary order."""
-    import numpy as np
-
-    d = len(parts.features)
-    rules = sorted(r for r in rules_rows if r[d + 1] > 0)
-    rl = np.array([r[:d] for r in rules], dtype=np.int64) - 1
-    rcls = np.array([r[d] for r in rules], dtype=np.int64)
-    rw = np.array([r[d + 1] for r in rules], dtype=np.float64)
-    classes = sorted({int(c) for c in rcls})
-    feat_names = [f.name for f in parts.features]
-    kinds = [f.kind for f in parts.features]
-    Ls = [parts.labels_for(f) for f in parts.features]
-    peaks = [
-        np.array(parts.peaks(f)) if f.kind == "numeric" else None
-        for f in parts.features
-    ]
-    hws = [
-        parts.half_width(f) if f.kind == "numeric" else None
-        for f in parts.features
-    ]
+    kernel = _RuleKernel(parts, rules_rows)
 
     def score(batches):
         import pandas as pd
 
         for pdf in batches:
-            n = len(pdf)
-            if not n or not rules:
-                continue
-            mu = _mu_per_rule(pdf, d, feat_names, kinds, Ls, peaks, hws, rl)
-            contrib = np.where(mu > 0, mu * rw[None, :], 0.0)
-            labs = pdf["label"].to_numpy(np.int64)
-            ssum = np.zeros(n)
-            ss2 = np.zeros(n)
-            c1 = np.zeros(n)
-            chit = np.zeros(n)
-            any_matched = np.zeros(n, dtype=bool)
-            for c in classes:
-                sel = rcls == c
-                matched = (mu[:, sel] > 0).any(axis=1)
-                cs = np.where(
-                    matched, np.round(contrib[:, sel].sum(axis=1), 9), 0.0
+            ids = pdf["id"].to_numpy(np.int64)
+            labels = pdf["label"].to_numpy(np.int64)
+            for sl, mu in kernel.chunks(pdf):
+                n = len(mu)
+                labs = labels[sl]
+                ssum = np.zeros(n)
+                ss2 = np.zeros(n)
+                c1 = np.zeros(n)
+                chit = np.zeros(n)
+                any_matched = np.zeros(n, dtype=bool)
+                for c, matched, cs in kernel.class_scores(mu):
+                    ssum = ssum + cs
+                    ss2 = ss2 + cs * cs
+                    if c == 1:
+                        c1 = np.where(matched, cs, c1)
+                    chit = np.where(matched & (labs == c), cs, chit)
+                    any_matched |= matched
+                if not any_matched.any():
+                    continue
+                m = any_matched
+                yield pd.DataFrame(
+                    {
+                        "id": ids[sl][m],
+                        "label": labs[m].astype(np.int32),
+                        "ssum": ssum[m],
+                        "c1": c1[m],
+                        "ss2": ss2[m],
+                        "chit": chit[m],
+                    }
                 )
-                ssum = ssum + cs
-                ss2 = ss2 + cs * cs
-                if c == 1:
-                    c1 = np.where(matched, cs, c1)
-                chit = np.where(matched & (labs == c), cs, chit)
-                any_matched |= matched
-            if not any_matched.any():
-                continue
-            m = any_matched
-            yield pd.DataFrame(
-                {
-                    "id": pdf["id"].to_numpy(np.int64)[m],
-                    "label": labs[m].astype(np.int32),
-                    "ssum": ssum[m],
-                    "c1": c1[m],
-                    "ss2": ss2[m],
-                    "chit": chit[m],
-                }
-            )
 
-    return df.mapInPandas(
+    return _kernel_input(df, parts).mapInPandas(
         score,
         "id long, label int, ssum double, c1 double, ss2 double, chit double",
     )
@@ -238,8 +307,7 @@ class ChiFRBCSModel:
     # collect_rules=False keeps the rule base as this persisted
     # DataFrame instead of driver-side rows — the scale path for
     # L^d-explosive models (L=5, d>=8) where the driver collect is the
-    # bottleneck. transform() broadcast-joins it exactly as the
-    # literal path does.
+    # bottleneck. transform() scores it with the cell-explosion join.
     rules_dataframe: DataFrame | None = field(default=None, repr=False)
 
     def rules_df(self, spark: SparkSession) -> DataFrame:
@@ -265,6 +333,25 @@ class ChiFRBCSModel:
     def transform(
         self, df: DataFrame, broadcast_rules: bool | None = None
     ) -> DataFrame:
+        """Score df -> (id, label, prediction).
+
+        Driver-resident rules in auto mode (broadcast_rules=None) take
+        the numpy kernel while _kernel_beats_join: ONE map-only pass,
+        each example scored where it lies with the rule base in the
+        task closure [FSS258 §4.1 classify job] — no cell explosion, no
+        join, no exchange. A larger rule base, a distributed one
+        (collect_rules=False) or an explicit broadcast_rules=True/False
+        runs the cell-explosion join scorer (transform_fuzzified);
+        both paths give bit-identical predictions (pinned by the scorer
+        parity tests and the classify_* oracles). Being map-only, the
+        kernel scores on as many tasks as df has partitions:
+        repartition a raw low-split scan first."""
+        if (
+            broadcast_rules is None
+            and self.rules_rows is not None
+            and _kernel_beats_join(len(self.rules_rows), len(self.parts.features))
+        ):
+            return self._transform_kernel(df)
         fuzz = R.fuzzify(df, self.parts)
         return self.transform_fuzzified(fuzz, broadcast_rules=broadcast_rules)
 
@@ -366,100 +453,29 @@ class ChiFRBCSModel:
             )
         )
 
-    # -- pandas/Arrow fast scorer (SURVEY §4: the path for high-d rule
-    # bases where the per-cell explosion stops paying off) --
-    def transform_pandas(self, df: DataFrame) -> DataFrame:
-        """mapInPandas scorer: per Arrow batch, build the n x L
-        membership matrix per feature in numpy, gather per rule,
-        product, scale by weights, argmax with the same deterministic
-        tie-break as the expression path (rules pre-sorted by
-        antecedent labels then class; np.argmax takes the first max).
-        Bit-identical to transform() — numpy evaluates the identical
-        IEEE expression chain (pinned by tests).
-
-        WHEN TO USE WHICH (fit-path A/B re-measured r13, sf0.1
-        local[32], warm medians, fitted model scoring the 32-way
-        input — NOTES r13 table): transform()'s candidate explosion
-        is 2^d rows per example (cost ~ 2^d * n) while this scorer's
-        is n * R (R = rule count). d=4: expression 7.0s vs pandas
-        1.6s; d=8: 4.2s vs 0.19s — the matmul wins BOTH at fixture
-        scale because rule bases are tiny there and the driver-side
-        rule collect it requires is free. Guidance: this path is the
-        default for big-d (d>=8) and for any fitted-model scoring
-        where the rules are driver-resident anyway (pair with
-        collect_rules=True — it warns on a distributed rule base).
-        transform() (broadcast-join) remains the DISTRIBUTED default:
-        no driver rule materialization, and if the rule base outgrows
-        the JVM broadcast budget, transform(broadcast_rules=False)
-        runs the same cell equi-join as a shuffle-hash join — nothing
-        rule-sized ever leaves the executors (the classify_wr_bigmodel
-        path). PARTITIONING TRAP (r13): ad-hoc transform() on a raw
-        low-split scan inherits its parallelism into the cell
-        explosion (3-partition sf0.1 scan: 25s vs 7s at 32) — fit()
-        repartitions to defaultParallelism before caching, so the
-        fit_transform path never hits this; repartition first if you
-        score a cold DataFrame."""
-        import numpy as np
-
-        parts = self.parts
-        d = len(parts.features)
-        if self.rules_rows is None:
-            # the numpy matmul path needs the rule arrays driver-side;
-            # materialize once from the distributed rule base. This
-            # intentionally defeats collect_rules=False's driver bound —
-            # say so instead of silently collecting.
-            import warnings
-
-            warnings.warn(
-                "transform_pandas on a distributed rule base collects it "
-                "to the driver; use transform() to keep the rule base "
-                "off the driver Python process",
-                stacklevel=2,
-            )
-            self.rules_rows = [tuple(r) for r in self.rules_dataframe.collect()]
-        rules = sorted((r for r in self.rules_rows if r[d + 1] > 0))
-        if rules:
-            rl = np.array([r[:d] for r in rules], dtype=np.int64) - 1  # 0-based
-            rcls = np.array([r[d] for r in rules], dtype=np.int64)
-            rw = np.array([r[d + 1] for r in rules], dtype=np.float64)
-        feat_names = [f.name for f in parts.features]
-        kinds = [f.kind for f in parts.features]
-        Ls = [parts.labels_for(f) for f in parts.features]
-        peaks = [
-            np.array(parts.peaks(f)) if f.kind == "numeric" else None
-            for f in parts.features
-        ]
-        hws = [
-            parts.half_width(f) if f.kind == "numeric" else None
-            for f in parts.features
-        ]
+    def _transform_kernel(self, df: DataFrame) -> DataFrame:
+        kernel = _RuleKernel(self.parts, self.rules_rows)
+        predict = kernel.predict_wr if self.frm == "wr" else kernel.predict_ac
         default_cls = self.default_cls
 
         def score(batches):
             import pandas as pd
 
             for pdf in batches:
-                n = len(pdf)
-                if n == 0 or not rules:
+                ids = pdf["id"].to_numpy()
+                labels = pdf["label"].to_numpy()
+                for sl, mu in kernel.chunks(pdf):
                     yield pd.DataFrame(
                         {
-                            "id": pdf["id"],
-                            "label": pdf["label"],
-                            "prediction": np.full(n, default_cls, dtype=np.int64),
+                            "id": ids[sl],
+                            "label": labels[sl],
+                            "prediction": predict(mu, default_cls).astype(np.int32),
                         }
                     )
-                    continue
-                mu = _mu_per_rule(pdf, d, feat_names, kinds, Ls, peaks, hws, rl)
-                scores = np.where(mu > 0, mu * rw[None, :], -np.inf)
-                best = np.argmax(scores, axis=1)
-                pred = np.where(
-                    np.isneginf(scores[np.arange(n), best]), default_cls, rcls[best]
-                )
-                yield pd.DataFrame(
-                    {"id": pdf["id"], "label": pdf["label"], "prediction": pred}
-                )
 
-        return df.mapInPandas(score, "id long, label int, prediction int")
+        return _kernel_input(df, self.parts).mapInPandas(
+            score, "id long, label int, prediction int"
+        )
 
     # -- persistence (O12) --
     def save(self, path: str) -> None:
@@ -657,30 +673,12 @@ class ChiFRBCSClassifier:
         self, df: DataFrame, broadcast_rules: bool | None = None
     ) -> DataFrame:
         """Fit and score the same data (resubstitution), reusing the
-        persisted narrow input for both passes.
-
-        Scoring path (r16): a WR fit with driver-resident rules takes
-        the numpy batch scorer — exactly the configuration
-        transform_pandas documents as its home turf (the rules are on
-        the driver ANYWAY, bounded by the data-touched L^d cells, and
-        the matmul needs NO shuffle: one map-only pass vs the join
-        path's 2^d-per-row cell explosion + groupBy(id) exchange of
-        every example — the better plan at fixture scale AND at 100 TB;
-        guide §4.2 batch-vectorized native code over JVM expression
-        chains). Measured at sf0.1/local[32], warm: 0.5s exec + 0.03s
-        plan vs 1.9s + 0.8s for the join scorer, bit-identical
-        predictions (tests/test_pandas_scorer.py pins parity; the
-        classify_* oracles re-verified). An explicit broadcast_rules
-        request, the AC FRM, or collect_rules=False (no driver rules
-        by design) keep the equi-join scorer."""
+        persisted narrow input for both passes. Scoring is
+        transform()'s routing: the map-only numpy kernel for
+        driver-resident rules in auto mode, the join scorer for
+        collect_rules=False or an explicit broadcast_rules."""
         model = self.fit(df, _retain_fuzz=True)
-        if (
-            self.frm == "wr"
-            and model.rules_rows is not None
-            and broadcast_rules is None
-        ):
-            return model.transform_pandas(self._base)
-        return model.transform(self._base, broadcast_rules=broadcast_rules)
+        return model.transform(self._base, broadcast_rules)
 
     def release(self) -> None:
         """Unpersist the training-input cache retained by

@@ -17,10 +17,13 @@ row per fold plus a mean row (fold = -1).
 
 Scale shape: fold files are read by the distributed CSV reader with
 a declared schema (header parsed driver-side, a few hundred bytes);
-each fit is the single-pass rule build; nothing driver-side grows
-with the data. At 100 TB the five fits run sequentially over
-disjoint ~80% slices — exactly the reference's protocol — and each
-is the same plan as `rulebuild_partitioned`.
+each fit is the single-pass rule build and each transform the
+map-only numpy scorer over the test file's splits (the rule base,
+bounded by the data-touched L^d cells, ships in the task closure);
+nothing driver-side grows with the data. At 100 TB the five fits
+run sequentially over disjoint ~80% slices — exactly the
+reference's protocol — and each is the same plan as
+`rulebuild_partitioned`.
 """
 
 from __future__ import annotations

@@ -12,7 +12,9 @@ Membership of x in label j (0-based, peak p_j, half-width h):
   otherwise  : greatest(0, 1 - abs(x - p_j)/h)
 Within the declared range this equals the classic unshouldered
 triangle; outside it the shoulders keep membership 1 (KEEL edge
-semantics).
+semantics). A missing value — null or NaN — has membership 0 in every
+label, so it matches no rule (left alone, least() would skip the null
+and sort the NaN above 1, putting it on both shoulders at 1.0).
 """
 
 from __future__ import annotations
@@ -32,21 +34,28 @@ def _dlit(v: float) -> str:
 def membership_col(x: Column, peak: float, h: float, j: int, num_labels: int) -> Column:
     if j == 0:
         core = F.lit(1.0) - (x - F.lit(peak)) / F.lit(h)
-        return F.greatest(F.lit(0.0), F.least(F.lit(1.0), core))
-    if j == num_labels - 1:
+        mu = F.greatest(F.lit(0.0), F.least(F.lit(1.0), core))
+    elif j == num_labels - 1:
         core = F.lit(1.0) - (F.lit(peak) - x) / F.lit(h)
-        return F.greatest(F.lit(0.0), F.least(F.lit(1.0), core))
-    core = F.lit(1.0) - F.abs(x - F.lit(peak)) / F.lit(h)
-    return F.greatest(F.lit(0.0), core)
+        mu = F.greatest(F.lit(0.0), F.least(F.lit(1.0), core))
+    else:
+        core = F.lit(1.0) - F.abs(x - F.lit(peak)) / F.lit(h)
+        mu = F.greatest(F.lit(0.0), core)
+    return F.when(x.isNull() | F.isnan(x), F.lit(0.0)).otherwise(mu)
 
 
 def membership_sql(xexpr: str, peak: float, h: float, j: int, num_labels: int) -> str:
     p, hh = _dlit(peak), _dlit(h)
     if j == 0:
-        return f"greatest(0.0, least(1.0, 1.0 - ({xexpr} - {p}) / {hh}))"
-    if j == num_labels - 1:
-        return f"greatest(0.0, least(1.0, 1.0 - ({p} - {xexpr}) / {hh}))"
-    return f"greatest(0.0, 1.0 - abs({xexpr} - {p}) / {hh})"
+        mu = f"greatest(0.0, least(1.0, 1.0 - ({xexpr} - {p}) / {hh}))"
+    elif j == num_labels - 1:
+        mu = f"greatest(0.0, least(1.0, 1.0 - ({p} - {xexpr}) / {hh}))"
+    else:
+        mu = f"greatest(0.0, 1.0 - abs({xexpr} - {p}) / {hh})"
+    return (
+        f"CASE WHEN {xexpr} IS NULL OR isnan({xexpr}) THEN CAST(0.0 AS DOUBLE)"
+        f" ELSE {mu} END"
+    )
 
 
 def nominal_membership_col(x: Column, j: int) -> Column:

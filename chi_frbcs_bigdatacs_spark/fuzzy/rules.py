@@ -182,10 +182,11 @@ def candidate_cells(
     aggregation and scoring is ONE broadcast equi-join on the cell
     key — both map-side combinable and skew-splittable by AQE.
 
-    pad_unmatched (the SCORING path sets it): a null feature value or
-    out-of-vocab nominal code has an all-zero/null membership array,
-    so the per-feature candidate list is empty and a plain explode
-    would drop the example entirely. Padding emits a sentinel
+    pad_unmatched (the SCORING path sets it): a missing value (null
+    or NaN numeric, null or out-of-vocab nominal code) has an all-zero
+    membership array (membership.py), so the per-feature candidate
+    list is empty and a plain explode would drop the example
+    entirely. Padding emits a sentinel
     (label 0, mu 0) instead — label 0 can never equi-join a rule
     (rule labels are 1-based), so the example flows through to the
     argmax as unmatched and takes the default class, exactly like the

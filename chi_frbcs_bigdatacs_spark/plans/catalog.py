@@ -188,9 +188,8 @@ def q_classify_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chi_frbcs_bigdatacs_spark.fuzzy.estimator import ChiFRBCSClassifier
 
     # only the TEST branch needs the repartition (r13): fit()
-    # repartitions train internally, but transform(test) would
-    # otherwise inherit the raw 3-file scan into the cell explosion
-    # (the estimator's documented partitioning trap)
+    # repartitions train internally, but the map-only transform(test)
+    # would otherwise score on the raw 3-file scan's few tasks
     df = lineitem_clf(spark, sf_dir)
     train = df.filter(F.col("id") % N_FOLDS != 0)
     test = df.filter(F.col("id") % N_FOLDS == 0).repartition(

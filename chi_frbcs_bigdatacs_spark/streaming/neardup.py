@@ -319,7 +319,7 @@ def _stream_substr_hits(
             if len(gd) and not isinstance(gd.iloc[0], bytes):
                 gd = gd.map(bytes)
             em_mask = gd.isin(emitted).to_numpy()
-            on_mask = gd.isin(once).to_numpy()
+            on_mask = gd.isin(once.keys()).to_numpy()
             multi_mask = gd.map(gd.value_counts()).to_numpy() >= 2
             emit_mask = em_mask | on_mask | multi_mask
             # retroactive: pending first occurrences now seen again

@@ -51,6 +51,9 @@ def _fast_tier_parity_keys() -> set[str]:
     )
 
 
+_TIER_DESELECTED = pytest.StashKey[int]()
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
@@ -67,9 +70,19 @@ def pytest_collection_modifyitems(config, items):
                 dropped.append(item)
                 continue
         kept.append(item)
+    config.stash[_TIER_DESELECTED] = len(dropped)
     if dropped:
         config.hook.pytest_deselected(items=dropped)
         items[:] = kept
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """State which tier ran, so a green report is never ambiguous."""
+    if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
+        terminalreporter.write_line("tier=full")
+    else:
+        n = config.stash.get(_TIER_DESELECTED, 0)
+        terminalreporter.write_line(f"tier=fast deselected={n}")
 
 
 @pytest.fixture(scope="session")

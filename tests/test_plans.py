@@ -4,6 +4,10 @@ executed plans — not just be hoped for."""
 
 from __future__ import annotations
 
+import dataclasses
+
+import pytest
+
 from tests.conftest import SF_SMALL
 
 
@@ -34,51 +38,74 @@ def test_fuzzify_whole_stage_codegen(spark):
 
 
 def test_scoring_is_map_only_numpy(spark):
-    """classify_wr (r16): a WR fit with driver-resident rules scores
-    via the numpy batch scorer — ONE map-only pass (MapInPandas), no
-    cell-explosion join, no groupBy(id) exchange of every example.
-    The rules ride in the task closure (bounded by the data-touched
-    L^d cells), so nothing rule- or example-sized shuffles."""
-    p = _plan(spark, "classify_wr")
-    assert ("MapInPandas" in p) or ("ArrowEvalPython" in p), p[:800]
-    assert "Join" not in p, "scoring regressed to the join path"
-    assert "Window" not in p
-    # the only exchange allowed is fit()'s round-robin input
-    # repartition — no hash exchange of the example rows (the old
-    # join path shuffled every example on groupBy(id))
-    assert "hashpartitioning" not in p, p[:800]
+    """classify_wr / classify_ac: a fit with driver-resident rules
+    scores via the numpy kernel — ONE map-only pass (MapInPandas), no
+    cell-explosion join, no groupBy(id) exchange of every example, for
+    both FRMs. The rules ride in the task closure (bounded by the
+    data-touched L^d cells), so nothing rule- or example-sized
+    shuffles."""
+    for key in ("classify_wr", "classify_ac"):
+        p = _plan(spark, key)
+        assert ("MapInPandas" in p) or ("ArrowEvalPython" in p), p[:800]
+        assert "Join" not in p, f"{key}: scoring regressed to the join path"
+        assert "Window" not in p
+        # the only exchange allowed is fit()'s round-robin input
+        # repartition — no hash exchange of the example rows (the
+        # join path shuffles every example on groupBy(id))
+        assert "hashpartitioning" not in p, p[:800]
 
 
-def test_scoring_uses_broadcast(spark):
-    """The join-path scorer (the no-driver-rules scale escape hatch)
-    must ride the rule base to tasks as a broadcast — never a shuffle
-    of the example side on rule keys, never a nested loop."""
-    p = _plan(spark, "classify_ac")
-    assert "BroadcastHashJoin" in p, "rule base not broadcast for scoring"
-    assert "BroadcastNestedLoopJoin" not in p
-    assert "CartesianProduct" not in p
+@pytest.fixture(scope="module")
+def lineitem_model(spark):
+    from chi_frbcs_bigdatacs_spark.fuzzy.estimator import ChiFRBCSClassifier
+    from chi_frbcs_bigdatacs_spark.fuzzy.partitions import LINEITEM_CLF_PARTITIONS as P
+    from chi_frbcs_bigdatacs_spark.sources.testdata import lineitem_clf
+
+    df = lineitem_clf(spark, SF_SMALL)
+    return ChiFRBCSClassifier(parts=P).fit(df), df
 
 
-def test_scoring_argmax_is_hash_aggregate(spark):
+def _join_plans(lineitem_model):
+    """Executed plans of the join scorer, requested explicitly
+    (broadcast_rules=True) for both FRMs."""
+    model, df = lineitem_model
+    for frm in ("wr", "ac"):
+        scored = dataclasses.replace(model, frm=frm).transform(df, broadcast_rules=True)
+        yield frm, scored._jdf.queryExecution().executedPlan().toString()
+
+
+def test_scoring_uses_broadcast(lineitem_model):
+    """The join-path scorer (explicit broadcast_rules=True here;
+    collect_rules=False below) must ride the rule base to tasks as a
+    broadcast — never a shuffle of the example side on rule keys,
+    never a nested loop."""
+    for frm, p in _join_plans(lineitem_model):
+        assert "BroadcastHashJoin" in p, f"{frm}: rule base not broadcast for scoring"
+        assert "BroadcastNestedLoopJoin" not in p
+        assert "CartesianProduct" not in p
+
+
+def test_scoring_argmax_is_hash_aggregate(spark, lineitem_model):
     """The join-path WR/AC argmax must plan as HashAggregate with
     map-side combine (r12, VERDICT r11 #5): the decimal-key encoding
     exists precisely so the per-example top-1 never pays a Window
     shuffle of all candidate rows NOR a SortAggregate's per-partition
     sort. A SortAggregate or Window here means the ordering key
-    regressed to a non-mutable buffer type (struct/string).
-    (classify_wr itself scores via the map-only numpy path since r16;
-    the join scorer stays pinned through classify_ac and the bigmodel
-    shuffle-join twin.)"""
-    for key in ("classify_ac", "classify_wr_bigmodel"):
-        p = _plan(spark, key)
+    regressed to a non-mutable buffer type (struct/string). Pinned on
+    the paths that still run the join: explicit broadcast_rules for
+    both FRMs, and the bigmodel shuffle-join twin
+    (collect_rules=False, broadcast_rules=False)."""
+    plans = list(_join_plans(lineitem_model))
+    plans.append(("classify_wr_bigmodel", _plan(spark, "classify_wr_bigmodel")))
+    for key, p in plans:
         assert "HashAggregate" in p, f"{key}: argmax not hash-aggregated"
         assert "SortAggregate" not in p, f"{key}: argmax fell to SortAggregate"
         if key != "classify_wr_bigmodel":
             # bigmodel inlines the whole FIT DAG (collect_rules=False),
             # whose cost/stot windows run over the rule-STATS table
             # (bounded at L^d * C rows) — those are fine; the scoring
-            # side is still window-free, pinned by the two keys above
-            # plus the SortAggregate assert here.
+            # side is still window-free, pinned by the explicit-join
+            # plans plus the SortAggregate assert here.
             assert "Window" not in p, f"{key}: scoring DAG contains a Window"
 
 
@@ -95,6 +122,7 @@ def test_distributed_rules_scoring_uses_broadcast(spark):
     p = model.transform(df)._jdf.queryExecution().executedPlan().toString()
     model.release()
     assert "BroadcastHashJoin" in p, "rule base not broadcast for scoring"
+    assert "HashAggregate" in p and "SortAggregate" not in p, p[:800]
 
 
 def test_neardup_lsh_is_equi_join(spark):

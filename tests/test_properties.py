@@ -133,12 +133,13 @@ def test_cost_scope_local_vs_global_diverge_on_skewed_buckets(spark):
 
 
 def test_scoring_auto_mode_flips_at_budget_and_stays_bit_identical(spark):
-    """r8 auto-mode: transform(broadcast_rules=None) must (a) pick the
-    broadcast plan for any model under the byte budget, (b) flip to
-    shuffle-hash exactly past it (pure decision function, boundary
-    pinned), and (c) produce BIT-IDENTICAL predictions on both
-    physical paths — the strategy is a plan choice, never a result
-    change."""
+    """Auto mode, transform(broadcast_rules=None), must (a) plan the
+    map-only numpy kernel for driver-resident rules and the broadcast
+    join for a collect_rules=False model under the byte budget, (b)
+    flip to shuffle-hash exactly past it (pure decision function,
+    boundary pinned), and (c) produce BIT-IDENTICAL predictions on the
+    kernel, broadcast and shuffle paths — the strategy is a plan
+    choice, never a result change."""
     from chi_frbcs_bigdatacs_spark.fuzzy.estimator import (
         AUTO_BROADCAST_BUDGET_BYTES,
         ChiFRBCSClassifier,
@@ -160,15 +161,26 @@ def test_scoring_auto_mode_flips_at_budget_and_stays_bit_identical(spark):
     df = lineitem_clf(spark, SF_SMALL)
     model = ChiFRBCSClassifier(parts=P).fit(df)
 
-    # (a) fixture model is far under budget -> auto = broadcast
+    def plan(scored):
+        return scored._jdf.queryExecution().executedPlan().toString()
+
+    # (a) fixture models are far under budget: driver-resident rules
+    # -> kernel, a distributed rule base -> broadcast join
     auto = model.transform(df)
-    p = auto._jdf.queryExecution().executedPlan().toString()
+    p = plan(auto)
+    assert "MapInPandas" in p and "Join" not in p, "auto mode did not pick the kernel"
+    dist = ChiFRBCSClassifier(parts=P, collect_rules=False).fit(df)
+    try:
+        p = plan(dist.transform(df))
+    finally:
+        dist.release()
     assert "BroadcastHashJoin" in p, "auto mode did not broadcast a small model"
 
-    # (c) both physical paths agree bit-for-bit
+    # (c) all three physical paths agree bit-for-bit
+    rows_k = sorted(map(tuple, auto.collect()))
     rows_b = sorted(map(tuple, model.transform(df, broadcast_rules=True).collect()))
     rows_s = sorted(map(tuple, model.transform(df, broadcast_rules=False).collect()))
-    assert rows_b == rows_s
+    assert rows_k == rows_b == rows_s
 
 
 def test_calibration_bins_account_for_all_fired_examples(spark):
