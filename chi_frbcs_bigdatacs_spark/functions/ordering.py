@@ -28,9 +28,10 @@ Two pieces:
   tie column is recoverable from the key via pmod (so argmax payloads
   like the predicted class ride inside the key — no join-back).
 
-Used by fuzzy/estimator.py and fuzzy/inference.py (O13/O14 scoring,
-VERDICT r11 #5). Reference semantics unchanged — this is a physical
-strategy, pinned bit-identical by the classify_* oracles.
+Used by the join scorer in fuzzy/estimator.py (O13/O14 scoring,
+VERDICT r11 #5) and by conflict resolution in fuzzy/rules.py.
+Reference semantics unchanged — this is a physical strategy, pinned
+bit-identical by the classify_* oracles.
 """
 
 from __future__ import annotations

@@ -33,10 +33,13 @@ Physical tuning vs the plain spec functions in rules.py:
     for rule bases too large to broadcast, swap the broadcast hint
     for a plain shuffle hash join (rules side is still the small
     side of the cell equi-join).
-  - the join-path per-example argmax uses max(struct(...)) hash
-    aggregation (map-side combine, no sort shuffle) instead of a
-    row_number window; the struct field order encodes exactly the
-    oracle's ORDER BY score DESC, l1..ld ASC, cls ASC tie-break.
+  - the join-path per-example argmax is max() of ONE DECIMAL key
+    (functions/ordering.py): hash aggregation with map-side combine,
+    no sort shuffle, no row_number window; the key encodes exactly
+    the oracle's ORDER BY score DESC, l1..ld ASC, cls ASC tie-break.
+  - the kernel's one batch loop (_RuleKernel.map) serves transform
+    (predict_wr / predict_ac), the AC metrics (ac_folds) and the
+    calibration key (wr_winner).
 
 Model persistence (O12): rules parquet + params JSON
 [REF: mapreduce/MapredOutput.java, Builder.java | conf=M].
@@ -196,16 +199,38 @@ class _RuleKernel:
             cs = np.where(matched, np.round(contrib[:, sel].sum(axis=1), 9), 0.0)
             yield c, matched, cs
 
-    def predict_wr(self, mu, default_cls: int):
-        """Winning rule: highest mu*weight; ties -> lowest (l1..ld,
-        cls) (np.argmax takes the first max over the sorted rule
-        axis); no matched rule -> default_cls."""
+    def map(self, df: DataFrame, reduce, schema: str) -> DataFrame:
+        """ONE map-only pass over df: only id, label and the feature
+        columns cross into the Arrow batches, each batch is scored in
+        row chunks, and reduce(ids, labels, mu) turns a chunk into its
+        output columns (a dict in schema order; it may drop rows)."""
+        names = [name for name, *_ in self.features]
+
+        def run(batches):
+            import pandas as pd
+
+            for pdf in batches:
+                ids = pdf["id"].to_numpy()
+                labels = pdf["label"].to_numpy()
+                for sl, mu in self.chunks(pdf):
+                    yield pd.DataFrame(reduce(ids[sl], labels[sl], mu))
+
+        return df.select("id", "label", *names).mapInPandas(run, schema)
+
+    def wr_winner(self, mu):
+        """Winning rule per row: (cls, score) of the highest mu*weight;
+        ties -> lowest (l1..ld, cls) (np.argmax takes the first max
+        over the sorted rule axis); score -inf where no rule fires."""
         if not len(self.rw):
-            return np.full(len(mu), default_cls, dtype=np.int64)
+            return np.zeros(len(mu), dtype=np.int64), np.full(len(mu), -np.inf)
         scores = np.where(mu > 0, mu * self.rw[None, :], -np.inf)
         best = np.argmax(scores, axis=1)
-        top = scores[np.arange(len(mu)), best]
-        return np.where(np.isneginf(top), default_cls, self.rcls[best])
+        return self.rcls[best], scores[np.arange(len(mu)), best]
+
+    def predict_wr(self, mu, default_cls: int):
+        """Winning rule's class; no fired rule -> default_cls."""
+        cls, score = self.wr_winner(mu)
+        return np.where(np.isneginf(score), default_cls, cls)
 
     def predict_ac(self, mu, default_cls: int):
         """Additive combination: highest class score; ties -> lowest
@@ -219,76 +244,46 @@ class _RuleKernel:
             best = np.where(win, cs, best)
         return pred
 
+    def ac_folds(self, ids, labels, mu):
+        """Reducer: per-example AC score folds (id, label, ssum, c1,
+        ss2, chit), the rows every AC metrics key aggregates. The
+        per-class scores are class_scores, the very sums predict_ac
+        takes the argmax over: a class with no matched rule
+        contributes nothing (the join scorer's inner-join contract),
+        and an example with no matched class emits no row.
+        The per-id folds over the ROUNDED class scores:
+          ssum = sum(cscore_c), ss2 = sum(cscore_c^2),
+          c1 = cscore of class 1 (0.0 absent), chit = cscore of the
+          true-label class (0.0 absent)
+        summed in ascending class order — on the binary fixture these
+        are <= 2-term IEEE additions (commutative, order-exact)."""
+        n = len(mu)
+        ssum = np.zeros(n)
+        ss2 = np.zeros(n)
+        c1 = np.zeros(n)
+        chit = np.zeros(n)
+        m = np.zeros(n, dtype=bool)  # any class matched
+        for c, matched, cs in self.class_scores(mu):
+            ssum = ssum + cs
+            ss2 = ss2 + cs * cs
+            if c == 1:
+                c1 = np.where(matched, cs, c1)
+            chit = np.where(matched & (labels == c), cs, chit)
+            m |= matched
+        return {
+            "id": ids[m],
+            "label": labels[m],
+            "ssum": ssum[m],
+            "c1": c1[m],
+            "ss2": ss2[m],
+            "chit": chit[m],
+        }
 
-def _kernel_input(df: DataFrame, parts: FuzzyPartitions) -> DataFrame:
-    """Only the columns the kernel reads cross into the Arrow batches."""
-    return df.select("id", "label", *[f.name for f in parts.features])
 
-
-def ac_per_example_pandas(
-    df: DataFrame, parts: FuzzyPartitions, rules_rows: list[tuple]
-) -> DataFrame:
-    """Per-EXAMPLE additive-combination score stats via the numpy
-    kernel: emits (id, label, ssum, c1, ss2, chit) — the folds every
-    AC metrics key aggregates — without the cell explosion, the
-    broadcast rule join, or ANY exchange (each example is one input
-    row, so both the per-class sums and the per-id folds over them
-    stay inside the row's batch).
-
-    The per-class scores are _RuleKernel.class_scores, the very sums
-    transform() takes the AC argmax over: a class with no matched
-    rule contributes nothing (the inner join's contract), and an
-    example with no matched class emits no row.
-    The per-id folds over the ROUNDED class scores:
-      ssum = sum(cscore_c), ss2 = sum(cscore_c^2),
-      c1 = cscore of class 1 (0.0 absent), chit = cscore of the
-      true-label class (0.0 absent)
-    summed in ascending class order — on the binary fixture these are
-    <= 2-term IEEE additions (commutative, order-exact); round-9 and
-    the checked-SF verifies cover the class sums themselves, whose
-    join-path partial aggregation already summed in
-    partition-arbitrary order."""
-    kernel = _RuleKernel(parts, rules_rows)
-
-    def score(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(np.int64)
-            labels = pdf["label"].to_numpy(np.int64)
-            for sl, mu in kernel.chunks(pdf):
-                n = len(mu)
-                labs = labels[sl]
-                ssum = np.zeros(n)
-                ss2 = np.zeros(n)
-                c1 = np.zeros(n)
-                chit = np.zeros(n)
-                any_matched = np.zeros(n, dtype=bool)
-                for c, matched, cs in kernel.class_scores(mu):
-                    ssum = ssum + cs
-                    ss2 = ss2 + cs * cs
-                    if c == 1:
-                        c1 = np.where(matched, cs, c1)
-                    chit = np.where(matched & (labs == c), cs, chit)
-                    any_matched |= matched
-                if not any_matched.any():
-                    continue
-                m = any_matched
-                yield pd.DataFrame(
-                    {
-                        "id": ids[sl][m],
-                        "label": labs[m].astype(np.int32),
-                        "ssum": ssum[m],
-                        "c1": c1[m],
-                        "ss2": ss2[m],
-                        "chit": chit[m],
-                    }
-                )
-
-    return _kernel_input(df, parts).mapInPandas(
-        score,
-        "id long, label int, ssum double, c1 double, ss2 double, chit double",
-    )
+def default_class(counts: dict[int, int]) -> int:
+    """The class of examples no rule fires on: the most frequent
+    training class (counts: class -> examples); ties -> lowest id."""
+    return min(counts, key=lambda c: (-counts[c], c))
 
 
 def _rules_schema(d: int) -> StructType:
@@ -351,7 +346,18 @@ class ChiFRBCSModel:
             and self.rules_rows is not None
             and _kernel_beats_join(len(self.rules_rows), len(self.parts.features))
         ):
-            return self._transform_kernel(df)
+            kernel = _RuleKernel(self.parts, self.rules_rows)
+            predict = kernel.predict_wr if self.frm == "wr" else kernel.predict_ac
+            dc = self.default_cls
+            return kernel.map(
+                df,
+                lambda ids, labels, mu: {
+                    "id": ids,
+                    "label": labels,
+                    "prediction": predict(mu, dc).astype(np.int32),
+                },
+                "id long, label int, prediction int",
+            )
         fuzz = R.fuzzify(df, self.parts)
         return self.transform_fuzzified(fuzz, broadcast_rules=broadcast_rules)
 
@@ -451,30 +457,6 @@ class ChiFRBCSModel:
                 "label",
                 O.decode_last_tie(F.col("k"), O.CLS_CAP).alias("prediction"),
             )
-        )
-
-    def _transform_kernel(self, df: DataFrame) -> DataFrame:
-        kernel = _RuleKernel(self.parts, self.rules_rows)
-        predict = kernel.predict_wr if self.frm == "wr" else kernel.predict_ac
-        default_cls = self.default_cls
-
-        def score(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                ids = pdf["id"].to_numpy()
-                labels = pdf["label"].to_numpy()
-                for sl, mu in kernel.chunks(pdf):
-                    yield pd.DataFrame(
-                        {
-                            "id": ids[sl],
-                            "label": labels[sl],
-                            "prediction": predict(mu, default_cls).astype(np.int32),
-                        }
-                    )
-
-        return _kernel_input(df, self.parts).mapInPandas(
-            score, "id long, label int, prediction int"
         )
 
     # -- persistence (O12) --
@@ -659,7 +641,7 @@ class ChiFRBCSClassifier:
         glob: dict[int, int] = {}
         for r in crows:
             glob[r["label"]] = glob.get(r["label"], 0) + r["n"]
-        default_cls = min(glob, key=lambda c: (-glob[c], c))
+        default_cls = default_class(glob)
         if _retain_fuzz:
             self._base = base  # reusable for resubstitution scoring
             _RETAINED_FUZZ.append(base)

@@ -1,7 +1,7 @@
 """DuckDB oracle SQL for the fuzzy core, generated from the SAME
 FuzzyPartitions constants as the Spark plan.
 
-Every CTE mirrors one stage of rules.py/inference.py with identical
+Every CTE mirrors one stage of rules.py/estimator.py with identical
 operand order, so doubles match bit-for-bit up to aggregation
 reorderings (whose error is absorbed by round(...,6) on both sides).
 The driver runs these on parquet views `lineitem` etc. at sf0.01.

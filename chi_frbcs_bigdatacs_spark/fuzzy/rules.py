@@ -154,16 +154,6 @@ def cost_literal(
     return expr
 
 
-def _match_degree(rules_prefix: str, parts: FuzzyPartitions):
-    """Product t-norm matching degree of an example row against a
-    rule's antecedent labels (columns `{prefix}l1..ld`)."""
-    factors = [
-        F.element_at(F.col(mus_col(f.name)), F.col(f"{rules_prefix}{label_col(i)}"))
-        for i, f in enumerate(parts.features)
-    ]
-    return reduce(lambda a, b: a * b, factors)
-
-
 def candidate_cells(
     fuzz: DataFrame,
     parts: FuzzyPartitions,

@@ -7,12 +7,12 @@ bottom so one import wires the whole surface).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chi_frbcs_bigdatacs_spark.fuzzy import oracle
 from chi_frbcs_bigdatacs_spark.fuzzy import rules as R
-from chi_frbcs_bigdatacs_spark.fuzzy import inference as I
 from chi_frbcs_bigdatacs_spark.fuzzy import metrics as M
 from chi_frbcs_bigdatacs_spark.fuzzy.membership import membership_col
 from chi_frbcs_bigdatacs_spark.fuzzy.partitions import LINEITEM_CLF_PARTITIONS
@@ -114,6 +114,44 @@ def _fit_predict(spark: SparkSession, sf_dir: str, frm: str) -> DataFrame:
 
     est = ChiFRBCSClassifier(parts=P, frm=frm)
     return est.fit_transform(lineitem_clf(spark, sf_dir))
+
+
+def _kernel_scored(
+    spark: SparkSession, sf_dir: str, reducer, schema: str
+) -> DataFrame:
+    """The shared scoring prelude of the AC metrics and calibration:
+    the rule base of ChiFRBCSClassifier.fit (the one classify_* scores
+    with) in the numpy kernel, mapped over the repartitioned fixture
+    (the raw scan is a few unsplittable files) with the reducer that
+    reducer(kernel) returns."""
+    from chi_frbcs_bigdatacs_spark.fuzzy.estimator import (
+        ChiFRBCSClassifier,
+        _RuleKernel,
+    )
+
+    df = _clf_par(spark, sf_dir)
+    kernel = _RuleKernel(P, ChiFRBCSClassifier(parts=P).fit(df).rules_rows)
+    return kernel.map(df, reducer(kernel), schema)
+
+
+_FIRED_WINNER_SCHEMA = "id long, label int, r_cls int, score double"
+
+
+def _fired_winner(kernel):
+    """Reducer: the WR winning rule's class and score (mu * weight)
+    per rule-fired example; default-class fallbacks emit no row."""
+
+    def reduce(ids, labels, mu):
+        cls, score = kernel.wr_winner(mu)
+        fired = ~np.isneginf(score)
+        return {
+            "id": ids[fired],
+            "label": labels[fired],
+            "r_cls": cls[fired],
+            "score": score[fired],
+        }
+
+    return reduce
 
 
 def q_classify_wr(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -483,8 +521,9 @@ register("rule_coverage", q_rule_coverage, _RULE_COVERAGE_SQL)
 # the table a practitioner builds before shipping a smaller model.
 # T is SCALE-RELATIVE (max(2, n/200): prunes 15/81 rules at
 # sf0.001 and 10/81 at sf0.01 — measured, non-vacuous at both SFs).
-# Scoring reuses the estimator's cell equi-join via a rules_dataframe
-# model — no BNLJ; the pruned-base scoring is the classify_wr plan.
+# Scoring collects the kept rules (at most rule-base sized) into a
+# driver-resident model, so the pruned base scores on the classify_wr
+# kernel.
 # Oracle: scoring_ctes with the rules CTE surgically rewritten to
 # join coverage (string replace on the generated SQL — pinned by the
 # hash itself: a drifted anchor string would break the oracle run).
@@ -493,8 +532,7 @@ register("rule_coverage", q_rule_coverage, _RULE_COVERAGE_SQL)
 def q_rulebase_prune_minsupport(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from chi_frbcs_bigdatacs_spark.fuzzy import inference as I_
-    from chi_frbcs_bigdatacs_spark.fuzzy.estimator import ChiFRBCSModel
+    from chi_frbcs_bigdatacs_spark.fuzzy.estimator import ChiFRBCSModel, default_class
 
     df = _clf_par(spark, sf_dir)
     n_total = df.count()  # driver scalar folded as a literal
@@ -504,21 +542,17 @@ def q_rulebase_prune_minsupport(
         F.col("weight") > 0
     )
     cov = fz.groupBy(*ANTS).agg(F.count(F.lit(1)).alias("n_covered"))
-    kept = (
-        rules.join(cov, ANTS)
+    kept = [
+        tuple(r)
+        for r in rules.join(cov, ANTS)
         .filter(F.col("n_covered") >= thr)
         .select(*ANTS, "cls", "weight")
-    )
+        .collect()
+    ]
     n_rules = rules.count()  # bounded: rule-base-sized
-    counts = df.groupBy("label").agg(F.count(F.lit(1)).alias("n"))
-    model = ChiFRBCSModel(
-        parts=P,
-        rules_rows=None,
-        default_cls=I_.default_class(counts),
-        frm="wr",
-        rules_dataframe=kept,
-    )
-    n_kept = model.rule_count()
+    counts = {r["label"]: r["count"] for r in df.groupBy("label").count().collect()}
+    model = ChiFRBCSModel(parts=P, rules_rows=kept, default_cls=default_class(counts))
+    n_kept = len(kept)
     pred = model.transform(df)
     c = pred.agg(
         F.sum(((F.col("label") == 1) & (F.col("prediction") == 1)).cast("long")).alias("tp"),
@@ -606,36 +640,9 @@ CAL_BINS = 10
 
 
 def q_metrics_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r9: the raw winning score now comes from the estimator's cell
-    # EQUI-join shape (candidate_cells explode -> broadcast hash join
-    # on the cell key), retiring this key's BroadcastNestedLoopJoin
-    # (VERDICT r8 "What's wrong" #2 — per-pair n*R work that grows
-    # with model size, vs <=2^d hash-pruned candidates per example).
-    # Bit-identical scores: candidate_cells' mu is the same
-    # left-associated membership product _match_degree evaluates, the
-    # join key IS the rule antecedent, and the struct-max argmax
-    # encodes the identical ORDER BY score DESC, l1..ld ASC, cls ASC
-    # tie-break (negated ints invert the order) — same oracle hash.
-    # r13: repartition before fuzzify (see _ac_scored, the shared
-    # prelude; measured 24s -> ~6s warm)
-    scored = _ac_scored(spark, sf_dir)
-    key = F.struct(
-        (F.col("mu") * F.col("weight")).alias("s"),
-        *[(-F.col(a)).alias(f"n_{a}") for a in ANTS],
-        (-F.col("r_cls")).alias("ncls"),
-    )
-    # only rule-fired examples appear (inner join; default-class
-    # fallbacks carry no score — unchanged contract)
-    win = (
-        scored.groupBy("id")
-        .agg(F.max(key).alias("k"), F.max("label").alias("label"))
-        .select(
-            "id",
-            "label",
-            (-F.col("k.ncls")).alias("r_cls"),
-            F.col("k.s").alias("score"),
-        )
-    )
+    # the classify_wr kernel's winning scores, bit-identical to the
+    # oracle's (pinned by test_scorer_implementations)
+    win = _kernel_scored(spark, sf_dir, _fired_winner, _FIRED_WINNER_SCHEMA)
     bin_ = F.least(
         F.floor(F.col("score") * CAL_BINS), F.lit(CAL_BINS - 1)
     ).cast("int")
@@ -780,59 +787,18 @@ register("metrics_mcc_kappa", q_metrics_mcc_kappa, _METRICS_MCC_KAPPA_SQL)
 # division chain.
 
 
-def _ac_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The shared AC-scoring prelude (fit + candidate-cell equi-join):
-    one definition for brier / calibration / pr_auc so the scoring
-    contract cannot drift per copy (the r13 _clf_par repartition fix
-    had to be applied per copy — never again). Repartitions the
-    narrow input BEFORE fuzzification: the raw sf0.1 scan is 3 files,
-    and the candidate explosion would otherwise run 3-wide (measured
-    31s vs ~6s)."""
-    df = _clf_par(spark, sf_dir)
-    fz = R.fuzzify(df, P)
-    rules = R.build_rules(
-        R.with_antecedent(fz, P), P, resolve=True, prefuzzified=True
-    )
-    r = rules.filter(F.col("weight") > 0).withColumnRenamed("cls", "r_cls")
-    cells = R.candidate_cells(fz, P)  # id, label, l1..ld, mu > 0
-    return cells.join(F.broadcast(r), ANTS)
-
-
-def _ac_cscores(scored: DataFrame) -> DataFrame:
-    """Per-(id, class) AC scores (round9 contract) from the scored
-    cell frame — the (id, r_cls, cscore, label) frame brier and
-    pr_auc aggregate."""
-    return scored.groupBy("id", "r_cls").agg(
-        F.round(F.sum(F.col("mu") * F.col("weight")), 9).alias("cscore"),
-        F.max("label").alias("label"),
-    )
+_AC_FOLDS_SCHEMA = (
+    "id long, label int, ssum double, c1 double, ss2 double, chit double"
+)
 
 
 def _ac_per_example(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-example AC score folds (id, label, ssum, c1, ss2, chit)
-    via the numpy membership core (r16, guide §4.2): the rule base is
-    tiny and driver-resident after the fit's collect (it was
-    broadcast-collected before anyway), so the class sums AND the
-    per-id folds over them compute inside one map-only pass — no cell
-    explosion, no broadcast join, no (id, r_cls) or (id) exchange.
-    Values are the identical round-9 contributing sets
-    (ac_per_example_pandas docstring); the three consumers' oracles
-    re-verified bit-exact at sf0.001/sf0.01."""
-    from chi_frbcs_bigdatacs_spark.fuzzy.estimator import ac_per_example_pandas
-
-    df = _clf_par(spark, sf_dir)
-    fz = R.fuzzify(df, P)
-    rules = R.build_rules(
-        R.with_antecedent(fz, P), P, resolve=True, prefuzzified=True
+    from the kernel's ac_folds reducer: one map-only pass, no cell
+    explosion, no join, no (id, r_cls) or (id) exchange."""
+    return _kernel_scored(
+        spark, sf_dir, lambda kernel: kernel.ac_folds, _AC_FOLDS_SCHEMA
     )
-    d = len(P.features)
-    rows = [
-        tuple(r)
-        for r in rules.filter(F.col("weight") > 0)
-        .select(*[f"l{i + 1}" for i in range(d)], "cls", "weight")
-        .collect()
-    ]
-    return ac_per_example_pandas(df, P, rows)
 
 
 def q_metrics_brier(spark: SparkSession, sf_dir: str) -> DataFrame:

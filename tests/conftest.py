@@ -35,14 +35,27 @@ _FAST_TIER_EXCLUDED_MODULES = {
 }
 
 
+# keys scored by the numpy rule kernel that neither the driver window
+# nor a bench group covers: a kernel regression must fail the fast tier
+_KERNEL_SCORED_KEYS = {
+    "classify_ac",
+    "metrics_calibration",
+    "metrics_brier",
+    "metrics_roc_auc",
+    "rulebase_prune_minsupport",
+}
+
+
 def _fast_tier_parity_keys() -> set[str]:
-    """Driver window + every key any bench group times."""
+    """Driver window + every key any bench group times + the
+    kernel-scored keys."""
     from chi_frbcs_bigdatacs_spark.plans.registry import CHECK_PRIORITY
 
     import bench
 
     return (
         set(CHECK_PRIORITY)
+        | _KERNEL_SCORED_KEYS
         | set(bench.HEADLINE)
         | set(bench.HEADLINE_EXT)
         | set(bench.HEADLINE_R12)

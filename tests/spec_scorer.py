@@ -1,4 +1,6 @@
-"""O13-O14 — Fuzzy Reasoning Method scoring.
+"""O13-O14 — the spec Fuzzy Reasoning Method scorer, kept as the
+reference the engine's scorers are tested against (next to
+oracle_chi.py, the golden numpy oracle of the build).
 
   WR (winning rule): predict class of argmax_j mu_Aj(x) * RW_j
     [REF: RuleBase.java::FRM_WR, mapreduce/Classifier.java | conf=M]
@@ -6,13 +8,12 @@
   AC (additive combination): per class sum of mu_Aj(x) * RW_j, argmax
     [REF: RuleBase.java::FRM_AC | conf=L]
 
-Physical strategy: the rule base is tiny (<= data-touched subset of
-L^d cells) so it is BROADCAST to the examples — the reference ships
-the model via DistributedCache to map tasks, the Spark-native
-equivalent is a broadcast nested-loop join with a matching-degree > 0
-filter, followed by a grouped argmax. The example side never
-shuffles; per-example candidate rows are bounded by 2^d matching
-cells (each value has at most 2 nonzero memberships per feature).
+Shape: the reference ships the model via DistributedCache to map
+tasks; the literal Spark reading is a broadcast nested-loop join
+(BNLJ) of examples x rules with a matching-degree > 0 filter,
+followed by a grouped argmax. Per-pair work grows with the rule base,
+which is why the engine scores with the numpy kernel or the
+cell-explosion equi-join instead (fuzzy/estimator.py).
 
 Examples matched by NO positive-weight rule get the default class
 (most frequent training class; deterministic tie -> lowest id).
@@ -25,6 +26,8 @@ class id — fully deterministic and mirrored in the DuckDB oracle.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -34,18 +37,17 @@ from chi_frbcs_bigdatacs_spark.functions.ordering import (
     decode_last_tie,
 )
 from chi_frbcs_bigdatacs_spark.fuzzy.partitions import FuzzyPartitions
-from chi_frbcs_bigdatacs_spark.fuzzy.rules import (
-    _match_degree,
-    label_col,
-    with_antecedent,
-    fuzzify,
-)
+from chi_frbcs_bigdatacs_spark.fuzzy.rules import fuzzify, label_col, mus_col
 
 
-def default_class(counts: DataFrame) -> int:
-    """Most frequent training class; ties -> lowest class id."""
-    row = counts.orderBy(F.col("n").desc(), F.col("label").asc()).first()
-    return int(row["label"])
+def _match_degree(rules_prefix: str, parts: FuzzyPartitions):
+    """Product t-norm matching degree of an example row against a
+    rule's antecedent labels (columns `{prefix}l1..ld`)."""
+    factors = [
+        F.element_at(F.col(mus_col(f.name)), F.col(f"{rules_prefix}{label_col(i)}"))
+        for i, f in enumerate(parts.features)
+    ]
+    return reduce(lambda a, b: a * b, factors)
 
 
 def _scored(fuzz: DataFrame, rules: DataFrame, parts: FuzzyPartitions) -> DataFrame:
@@ -68,18 +70,10 @@ def classify_wr(
 ) -> DataFrame:
     """FRM Winning Rule -> (id, label, prediction).
 
-    The per-example argmax is a single-decimal-key hash aggregate,
-    not a row_number window (r12, VERDICT r11 #5): a window must
-    shuffle EVERY scored candidate row on id and sort within
-    partitions, while max(key) partial-aggregates map-side — each
-    task reduces its candidates to one row per id before the
-    exchange, so the shuffle carries |ids| rows instead of
-    |ids| * |candidates| (up to 2^d candidates/example). The pinned
-    tie order (score desc, antecedent labels asc, class asc) is
-    encoded order-isomorphically into one DECIMAL(38,0)
-    (functions/ordering.py — struct orderings would demote the plan
-    to SortAggregate), and the winning class decodes back out of the
-    key, so the aggregate stays deterministic and join-free."""
+    The per-example argmax is max() of one DECIMAL(38,0) key
+    (functions/ordering.py) encoding the pinned tie order (score
+    desc, antecedent labels asc, class asc); the winning class
+    decodes back out of the key."""
     ants = [label_col(i) for i in range(len(parts.features))]
     fuzz = fuzzify(df, parts)
     scored = _scored(fuzz, rules, parts)
@@ -112,9 +106,7 @@ def classify_ac(
     per_class = scored.groupBy("id", "r_cls").agg(
         F.round(F.sum("score"), 9).alias("cscore")
     )
-    # Same decimal-key hash-aggregate shape as classify_wr (r12):
-    # (cscore desc, r_cls asc) as max of one orderable decimal; the
-    # class decodes back out of the winning key.
+    # same decimal-key argmax as classify_wr: (cscore desc, r_cls asc)
     best = per_class.groupBy("id").agg(
         decode_last_tie(
             F.max(argmax_decimal_key(F.col("cscore"), [(F.col("r_cls"), CLS_CAP)])),

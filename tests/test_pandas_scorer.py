@@ -127,6 +127,35 @@ def test_pandas_scorer_missing_and_wild_values(spark, duck, nominal_model):
         got = [tuple(map(int, r)) for r in out[["id", "label", "prediction"]].values]
         assert got == sorted(duck.execute(want[frm]).fetchall()), frm
 
+    # the metrics reducers: a missing-value row fires no rule, so it
+    # emits no fold and no winning score
+    import numpy as np
+
+    from chi_frbcs_bigdatacs_spark.fuzzy.estimator import _RuleKernel
+    from chi_frbcs_bigdatacs_spark.plans import catalog
+
+    kernel = _RuleKernel(model.parts, model.rules_rows)
+    reducers = {
+        "ac_folds": (kernel.ac_folds, catalog._AC_FOLDS_SCHEMA),
+        "wr_winner": (catalog._fired_winner(kernel), catalog._FIRED_WINNER_SCHEMA),
+    }
+    all_missing = wild.filter("id IN (1, 4, 5, 6)")
+    for name, (reduce, schema) in reducers.items():
+        assert kernel.map(all_missing, reduce, schema).collect() == [], name
+
+    # every reducer on an empty DataFrame, through Spark and on a
+    # zero-row chunk directly: zero rows, no error
+    empty = wild.limit(0)
+    for frm in ("wr", "ac"):
+        assert dataclasses.replace(model, frm=frm).transform(empty).collect() == []
+    for name, (reduce, schema) in reducers.items():
+        assert kernel.map(empty, reduce, schema).collect() == [], name
+    mu = np.zeros((0, len(kernel.rw)))
+    none = np.zeros(0, dtype=np.int64)
+    assert len(kernel.predict_wr(mu, 0)) == len(kernel.predict_ac(mu, 0)) == 0
+    for name, (reduce, _) in reducers.items():
+        assert all(len(v) == 0 for v in reduce(none, none, mu).values()), name
+
 
 def test_auto_mode_keeps_join_past_kernel_crossover(spark):
     """Auto mode runs the kernel only while R <= 16 * 2^d; a larger

@@ -59,11 +59,10 @@ BNL_ALLOWED = {
     "agg_class_counts",
     "metrics_gm_auc_multiclass",
     "crossval_multiclass",
-    # (r9: metrics_calibration's BNLJ retired — it now routes the raw
-    # winning score through the estimator's cell equi-join, so the
-    # allowlist no longer carries any entry that grows with model
-    # size; inference._scored remains the documented spec shape for
-    # the library API only)
+    # (metrics_calibration's BNLJ is retired — its winning score comes
+    # from the numpy kernel, so the allowlist carries no entry that
+    # grows with model size; the BNLJ spec scorer lives only in
+    # tests/spec_scorer.py)
 }
 
 

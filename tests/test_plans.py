@@ -38,8 +38,9 @@ def test_fuzzify_whole_stage_codegen(spark):
 
 
 def test_scoring_is_map_only_numpy(spark):
-    """classify_wr / classify_ac: a fit with driver-resident rules
-    scores via the numpy kernel — ONE map-only pass (MapInPandas), no
+    """classify_wr / classify_ac (and the AC metrics and calibration
+    keys, below): a fit with driver-resident rules scores via the
+    numpy kernel — ONE map-only pass (MapInPandas), no
     cell-explosion join, no groupBy(id) exchange of every example, for
     both FRMs. The rules ride in the task closure (bounded by the
     data-touched L^d cells), so nothing rule- or example-sized
@@ -53,6 +54,15 @@ def test_scoring_is_map_only_numpy(spark):
         # repartition — no hash exchange of the example rows (the
         # join path shuffles every example on groupBy(id))
         assert "hashpartitioning" not in p, p[:800]
+    # the AC metrics and calibration score on the same kernel; their
+    # aggregations run over its output, and the only join left is the
+    # pr/roc bounded grid's cross join with its one-row totals
+    metrics = ("metrics_calibration", "metrics_brier", "metrics_pr_auc", "metrics_roc_auc")
+    for key in metrics:
+        p = _plan(spark, key)
+        assert "MapInPandas" in p, f"{key}: not scored by the kernel"
+        joins = [ln for ln in p.splitlines() if "Join" in ln]
+        assert all("BroadcastNestedLoopJoin" in ln for ln in joins), (key, joins)
 
 
 @pytest.fixture(scope="module")

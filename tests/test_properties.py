@@ -196,8 +196,8 @@ def test_calibration_bins_account_for_all_fired_examples(spark):
         q_metrics_calibration,
     )
     from chi_frbcs_bigdatacs_spark.fuzzy import rules as R
-    from chi_frbcs_bigdatacs_spark.fuzzy import inference as I
     from chi_frbcs_bigdatacs_spark.sources.testdata import lineitem_clf
+    from tests import spec_scorer
     from tests.conftest import SF_SMALL
 
     rows = q_metrics_calibration(spark, SF_SMALL).collect()
@@ -211,7 +211,7 @@ def test_calibration_bins_account_for_all_fired_examples(spark):
     rules = R.build_rules(
         R.with_antecedent(fz, P), P, resolve=True, prefuzzified=True
     )
-    n_fired = I._scored(fz, rules, P).select("id").distinct().count()
+    n_fired = spec_scorer._scored(fz, rules, P).select("id").distinct().count()
     assert sum(r["n"] for r in rows) == n_fired
 
 
