@@ -6,15 +6,20 @@ build job (E1), transform() is the map-only classify job (E2) with
 the model broadcast to tasks (the Spark-native DistributedCache).
 
 Physical tuning vs the plain spec functions in rules.py:
-  - only the NARROW repartitioned input is persisted; membership
-    arrays are recomputed per pass (pure codegen arithmetic — far
-    cheaper at 100 TB than caching d wide array columns). The
-    repartition spreads a few large input splits across executors
-    before the <=2^d-per-row cell expansion.
-  - class counts are collected once (tiny: |classes| rows) and the
-    CS cost vector + default class are folded into the build plan as
-    literals — no broadcast-join exchange for costs.
-  - the final rule base is collected to the driver (bounded by the
+  - fit() reads its input ONCE, as the caller partitioned it: no
+    repartition, no cache (a low-split scan is the caller's to
+    repartition, as for transform). Only fit_transform, which reads
+    the same rows twice, repartitions and persists the narrow input;
+    membership arrays are recomputed per pass (pure codegen
+    arithmetic — far cheaper at 100 TB than caching d wide array
+    columns).
+  - the build job's output is the tiny per-(cell, class) aggregate
+    (<= L^d x classes rows). With collect_rules it is collected and
+    the rest of the build — class counts, CS costs, PCF weights,
+    conflict resolution, bucket fusion — is plain Python on the
+    driver (_rules_from_raw), bit-identical to the Spark expressions
+    of rules.py; no second Spark job, no local DataFrame round trip.
+  - the final rule base stays on the driver (bounded by the
     data-touched subset of L^d cells; L=3,d=4 -> <= 81 rules; the
     reference's models are the same size), so transform() is the
     map-only numpy kernel (_RuleKernel) with the rule arrays in the
@@ -47,9 +52,13 @@ Model persistence (O12): rules parquet + params JSON
 
 from __future__ import annotations
 
+import itertools
 import json
+import math
 import os
+import threading
 from dataclasses import dataclass, field
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -66,16 +75,89 @@ from chi_frbcs_bigdatacs_spark.fuzzy import rules as R
 from chi_frbcs_bigdatacs_spark.fuzzy.partitions import FeatureSpec, FuzzyPartitions
 
 
-# At most ONE fuzzified-training cache lives at a time, session-wide:
-# every fit() first releases caches retained by previous fits (of any
-# estimator instance — bench/sweep runs construct a fresh estimator
-# per query). Unpersisting is always safe: lineage recomputes.
-_RETAINED_FUZZ: list[DataFrame] = []
+# At most ONE training-input cache (fit_transform's) lives at a time,
+# session-wide: every fit() first releases caches retained by previous
+# fits (of any estimator instance — bench/sweep runs construct a fresh
+# estimator per query). Unpersisting is always safe: lineage recomputes.
+_RETAINED_INPUTS: list[DataFrame] = []
+_RETAINED_LOCK = threading.Lock()
 
 
 def _release_retained() -> None:
-    while _RETAINED_FUZZ:
-        _RETAINED_FUZZ.pop().unpersist()
+    # swap the whole list out under the lock: concurrent fits each
+    # unpersist a disjoint set, none pops an emptied list
+    with _RETAINED_LOCK:
+        frames = _RETAINED_INPUTS[:]
+        _RETAINED_INPUTS.clear()
+    for df in frames:
+        df.unpersist()
+
+
+def _empty_training_set() -> ValueError:
+    return ValueError(
+        "ChiFRBCSClassifier.fit: empty training set (no rows after "
+        "validity filtering) — cannot derive costs or a default class"
+    )
+
+
+# Spark's round(x, d) on a DOUBLE is BigDecimal.valueOf(x) — the
+# decimal string Double.toString(x) — set to scale d with HALF_UP. The
+# context is wide enough for any finite double at 6 places.
+_WEIGHT_QUANTUM = Decimal(1).scaleb(-R.WEIGHT_DECIMALS)
+_DECIMAL_CTX = Context(prec=400)
+
+
+def _half_up(x: float) -> Decimal:
+    """Decimal(repr(x)) set to R.WEIGHT_DECIMALS places, HALF_UP. repr
+    is the shortest round-trip string; JDK 17's Double.toString is not
+    always the shortest, which the round sweep test checks cannot move
+    a rounded value."""
+    return Decimal(repr(x)).quantize(_WEIGHT_QUANTUM, ROUND_HALF_UP, _DECIMAL_CTX)
+
+
+def _spark_round(x: float) -> float:
+    """round(x, R.WEIGHT_DECIMALS) exactly as Spark computes it on a
+    DOUBLE; NaN and +-inf pass through. The + 0.0 turns a rounded -0
+    into 0.0 (BigDecimal has no -0)."""
+    return float(_half_up(x)) + 0.0 if math.isfinite(x) else x
+
+
+def _pcf_weight(s: float, stot: float) -> float | None:
+    """PCF-CS rule weight round((2 s - stot) / stot, 6); None where
+    stot == 0, as Spark's x / 0 is NULL."""
+    return _spark_round((2.0 * s - stot) / stot) if stot != 0 else None
+
+
+def _decimal6(w: float | None) -> Decimal | None:
+    """Spark's CAST(w AS DECIMAL(18,6)): HALF_UP at 6 places; NULL for
+    NULL, non-finite or out-of-range values."""
+    if w is None or not math.isfinite(w):
+        return None
+    q = _half_up(w)
+    return q if q.adjusted() < 18 - R.WEIGHT_DECIMALS else None
+
+
+def _cls_order(cand: tuple) -> int:
+    # a NULL class only comes with a NULL weight, which _resolve skips
+    return -1 if cand[0] is None else cand[0]
+
+
+def _rank(w: float) -> tuple:
+    return (w != w, w)  # NaN above every number, as Spark orders doubles
+
+
+def _resolve(cands) -> tuple | None:
+    """O9 over (cls, weight) candidates in ascending class order, as
+    R.resolve_conflicts orders them: the max weight wins, ties -> the
+    first (lowest) class, NULL weights never win. None for no
+    candidates; (None, None) if every weight is NULL."""
+    best = None
+    for c, w in cands:
+        if best is None:
+            best = (None, None)
+        if w is not None and (best[1] is None or _rank(w) > _rank(best[1])):
+            best = (c, w)
+    return best
 
 
 # Auto-mode broadcast budget for the scoring join. A rule row in the
@@ -461,7 +543,10 @@ class ChiFRBCSModel:
 
     # -- persistence (O12) --
     def save(self, path: str) -> None:
-        spark = SparkSession.getActiveSession()
+        # active(), not getActiveSession(): the latter is None on a
+        # thread that has not used the session yet (fit() no longer
+        # creates a DataFrame on the driver, which used to set it)
+        spark = SparkSession.active()
         self.rules_df(spark).write.mode("overwrite").parquet(f"{path}/rules.parquet")
         meta = {
             "num_labels": self.parts.num_labels,
@@ -519,7 +604,6 @@ class ChiFRBCSClassifier:
     cost_mode: str = "cs"  # 'cs' (PCF-CS [FSS258]) | 'none' (plain PCF [IJCIS8])
     num_buckets: int | None = None  # None = exact-global (invariant) mode
     merge_policy: str = "max"  # 'max' | 'avg' (O11 [IJCIS8])
-    repartition: int | None = None  # None = session default parallelism
     collect_rules: bool = True  # False = keep the rule base distributed
     # Minimum-support rule pruning (the rulebase_prune_minsupport key
     # promoted to an estimator param, VERDICT r9 #7): rules whose
@@ -532,135 +616,167 @@ class ChiFRBCSClassifier:
     min_rule_support: int = 0
     _base: DataFrame | None = field(default=None, repr=False)
 
-    def fit(self, df: DataFrame, _retain_fuzz: bool = False) -> ChiFRBCSModel:
-        """ONE heavy Spark job: the bounded cell explosion aggregated
-        into per-(cell, class) statistics (R.raw_rule_stats — map-side
-        combined, <= L^d x classes output rows). Class counts (= sum
-        of generated-cell flags), CS costs, the default class, PCF
-        weights, and conflict resolution all derive from that tiny
-        aggregate — computed on a collected-and-recreated LOCAL
-        DataFrame so the weight arithmetic/rounding exprs are the very
-        ones the distributed path and the DuckDB oracle use. Only the
-        NARROW repartitioned input is cached; membership arrays are
-        recomputed per pass — pure codegen arithmetic, far cheaper at
-        100 TB than caching d wide array columns."""
+    def fit(self, df: DataFrame) -> ChiFRBCSModel:
+        """ONE pass over df, as the caller partitioned it: the bounded
+        cell explosion aggregated into per-(cell, class) statistics
+        (R.raw_rule_stats — map-side combined, <= L^d x classes output
+        rows). No repartition and no cache: df is read once, so task
+        sizing is the caller's (repartition a low-split scan first, as
+        for transform).
+
+        With collect_rules (the default) the aggregate is collected and
+        everything after it — class counts (sum of generated-cell
+        flags), CS costs, the default class, PCF weights, conflict
+        resolution, bucket fusion, support pruning — is plain Python on
+        the driver (_rules_from_raw), bit-identical to the Spark
+        expressions of R.weights_from_raw / R.merge_* that the
+        collect_rules=False path and the DuckDB oracle use."""
         self.release()  # drop any cache pinned by a previous fit
         _release_retained()  # ... including by OTHER estimator instances
-        spark = df.sparkSession
-        n = self.repartition or spark.sparkContext.defaultParallelism
-        # repartition the narrow input BEFORE fuzzification so the wide
-        # membership arrays are computed in parallel, not shuffled
-        base = df.repartition(n).persist()
-
         keys: list[str] = []
-        fz = R.with_antecedent(R.fuzzify(base, self.parts), self.parts)
+        fz = R.with_antecedent(R.fuzzify(df, self.parts), self.parts)
         if self.num_buckets is not None:
             fz = fz.withColumn(
                 "bucket", (F.col("id") % self.num_buckets).cast("int")
             )
             keys = ["bucket"]
-        ants = [R.label_col(i) for i in range(len(self.parts.features))]
         raw = R.raw_rule_stats(fz, self.parts, keys)
-
-        def _empty() -> ValueError:
-            base.unpersist()
-            return ValueError(
-                "ChiFRBCSClassifier.fit: empty training set (no rows after "
-                "validity filtering) — cannot derive costs or a default class"
-            )
-
-        def _post(raw_df: DataFrame, crows) -> DataFrame:
-            """O5 costs + O8/O9 (+O11 fusion) on the tiny aggregate."""
-            cost_col = R.cost_literal(crows, self.cost_mode, bucketed=bool(keys))
-            rules = R.weights_from_raw(
-                raw_df, self.parts, keys, resolve=True, cost_col=cost_col
-            )
-            if keys:
-                rules = (
-                    R.merge_max(rules, ants)
-                    if self.merge_policy == "max"
-                    else R.merge_avg(rules, ants)
-                )
-            return rules.select(*ants, "cls", "weight")
 
         if self.collect_rules:
             raw_rows = raw.collect()  # THE heavy job; tiny result
             if not raw_rows:
-                raise _empty()
-            counts: dict[tuple, int] = {}
-            for r in raw_rows:
-                k = (r["bucket"] if keys else None, r["label"])
-                counts[k] = counts.get(k, 0) + r["n_gen"]
-            crows = [
-                {"bucket": b, "label": lab, "n": cnt}
-                for (b, lab), cnt in counts.items()
-            ]
-            local = spark.createDataFrame(raw_rows, schema=raw.schema)
-            rows: list[tuple] | None = [
-                tuple(r) for r in _post(local, crows).collect()
-            ]
-            if self.min_rule_support > 0:
-                # per-cell coverage from the aggregate already on the
-                # driver: sum n_gen across buckets and labels
-                d = len(ants)
-                cov: dict[tuple, int] = {}
-                for r in raw_rows:
-                    cell = tuple(r[a] for a in ants)
-                    cov[cell] = cov.get(cell, 0) + r["n_gen"]
-                rows = [
-                    t
-                    for t in rows
-                    if cov.get(t[:d], 0) >= self.min_rule_support
-                ]
-            rdf: DataFrame | None = None
-        else:
-            # scale path: the aggregate stays a persisted DataFrame
-            # (never on the driver); the rule base is materialized
-            # distributed and scoring broadcast-joins it
-            raw = raw.persist()
-            crows = raw.groupBy(*keys, "label").agg(
-                F.sum("n_gen").alias("n")
-            ).collect()  # tiny; materializes the raw cache
-            if not crows:
-                raw.unpersist()
-                raise _empty()
-            rows = None
-            rdf = _post(raw, crows)
-            if self.min_rule_support > 0:
-                cov = raw.groupBy(*ants).agg(
-                    F.sum("n_gen").alias("n_covered")
-                )
-                rdf = (
-                    rdf.join(cov, ants)
-                    .filter(F.col("n_covered") >= self.min_rule_support)
-                    .select(*ants, "cls", "weight")
-                )
-            rdf = rdf.persist()
-            rdf.count()
+                raise _empty_training_set()
+            rows, counts = self._rules_from_raw(raw_rows)
+            return ChiFRBCSModel(self.parts, rows, default_class(counts), self.frm)
+
+        # scale path: the aggregate stays a persisted DataFrame (never
+        # on the driver); the rule base is materialized distributed and
+        # scoring broadcast-joins it
+        ants = [R.label_col(i) for i in range(len(self.parts.features))]
+        raw = raw.persist()
+        crows = raw.groupBy(*keys, "label").agg(
+            F.sum("n_gen").alias("n")
+        ).collect()  # tiny; materializes the raw cache
+        if not crows:
             raw.unpersist()
-        glob: dict[int, int] = {}
-        for r in crows:
-            glob[r["label"]] = glob.get(r["label"], 0) + r["n"]
-        default_cls = default_class(glob)
-        if _retain_fuzz:
-            self._base = base  # reusable for resubstitution scoring
-            _RETAINED_FUZZ.append(base)
-        else:
-            base.unpersist()
-        return ChiFRBCSModel(
-            self.parts, rows, default_cls, self.frm, rules_dataframe=rdf
+            raise _empty_training_set()
+        cost_col = R.cost_literal(crows, self.cost_mode, bucketed=bool(keys))
+        rdf = R.weights_from_raw(
+            raw, self.parts, keys, resolve=True, cost_col=cost_col
         )
+        if keys:
+            merge = R.merge_max if self.merge_policy == "max" else R.merge_avg
+            rdf = merge(rdf, ants)
+        rdf = rdf.select(*ants, "cls", "weight")
+        if self.min_rule_support > 0:
+            cov = raw.groupBy(*ants).agg(F.sum("n_gen").alias("n_covered"))
+            rdf = (
+                rdf.join(cov, ants)
+                .filter(F.col("n_covered") >= self.min_rule_support)
+                .select(*ants, "cls", "weight")
+            )
+        rdf = rdf.persist()
+        rdf.count()
+        raw.unpersist()
+        counts: dict[int, int] = {}
+        for r in crows:
+            counts[r["label"]] = counts.get(r["label"], 0) + r["n"]
+        return ChiFRBCSModel(
+            self.parts, None, default_class(counts), self.frm, rules_dataframe=rdf
+        )
+
+    def _rules_from_raw(self, raw_rows: list) -> tuple[list[tuple], dict[int, int]]:
+        """Collected R.raw_rule_stats rows -> (rule rows (l1..ld, cls,
+        weight) sorted by (l1..ld, cls), training examples per class).
+
+        The semantics of R.cost_literal + R.weights_from_raw +
+        R.merge_max / merge_avg, step for step on the same doubles:
+          O5   cost: CS float(maxn) / float(n) per (bucket) scope,
+               'none' 1.0, a dict its value (1.0 for an absent class);
+          O8   s = cost * sraw, stot = sum of s over the (bucket, cell)
+               in ascending class order; candidates are n_gen > 0;
+               weight = round((2.0 * s - stot) / stot, 6) (_pcf_weight);
+          O9   per (bucket, cell) the max weight, ties -> lowest cls;
+          O11  max: the same across buckets; avg: the exact
+               decimal(18,6) sum / count per (cell, cls), then O9;
+        then min_rule_support against the cell's summed n_gen."""
+        d = len(self.parts.features)
+        bucketed = self.num_buckets is not None
+        k = int(bucketed)  # raw row: (bucket?, l1..ld, label, sraw, n_gen)
+        stats = sorted(
+            ((r[0] if bucketed else None, tuple(r[k : k + d])), *r[k + d :])
+            for r in raw_rows
+        )
+        counts: dict[tuple, int] = {}  # (bucket, label) -> examples
+        cover: dict[tuple, int] = {}  # cell -> examples generating it
+        for (b, cell), label, _, n_gen in stats:
+            counts[b, label] = counts.get((b, label), 0) + n_gen
+            cover[cell] = cover.get(cell, 0) + n_gen
+        maxn: dict[object, int] = {}
+        for (b, _), n in counts.items():
+            maxn[b] = max(maxn.get(b, 0), n)
+
+        def cost(b, label) -> float:
+            if self.cost_mode == "none":
+                return 1.0
+            if isinstance(self.cost_mode, dict):
+                return float(self.cost_mode.get(label, 1.0))
+            return float(maxn[b]) / float(counts[b, label])
+
+        partials: dict[tuple, list] = {}  # cell -> [(cls, weight)], one per bucket
+        for (b, cell), grp in itertools.groupby(stats, key=lambda t: t[0]):
+            cands = [(lab, cost(b, lab) * sraw, n_gen) for _, lab, sraw, n_gen in grp]
+            stot = sum(s for _, s, _ in cands)
+            best = _resolve(
+                (lab, _pcf_weight(s, stot)) for lab, s, n_gen in cands if n_gen > 0
+            )
+            if best is not None:
+                partials.setdefault(cell, []).append(best)
+        if bucketed and self.merge_policy == "avg":
+            for cell, ws in partials.items():
+                sums: dict[object, list] = {}  # cls -> [decimal sum, count]
+                for c, w in ws:
+                    acc = sums.setdefault(c, [None, 0])
+                    dw = _decimal6(w)
+                    if dw is not None:
+                        acc[0] = dw if acc[0] is None else acc[0] + dw
+                    acc[1] += 1
+                partials[cell] = [
+                    (c, None if tot is None else float(tot) / n)
+                    for c, (tot, n) in sums.items()
+                ]
+        rows = [
+            (*cell, *_resolve(sorted(ws, key=_cls_order)))
+            for cell, ws in sorted(partials.items())
+            if cover[cell] >= self.min_rule_support
+        ]
+        glob: dict[int, int] = {}
+        for (_, label), n in counts.items():
+            glob[label] = glob.get(label, 0) + n
+        return rows, glob
 
     def fit_transform(
         self, df: DataFrame, broadcast_rules: bool | None = None
     ) -> DataFrame:
-        """Fit and score the same data (resubstitution), reusing the
-        persisted narrow input for both passes. Scoring is
+        """Fit and score the same data (resubstitution). Both passes
+        read df, so this is the one place the input is spread to the
+        session's default parallelism and persisted: fit() builds from
+        the cached frame and the returned scoring pass reads it again
+        (it stays retained until the next fit or release()). Scoring is
         transform()'s routing: the map-only numpy kernel for
         driver-resident rules in auto mode, the join scorer for
         collect_rules=False or an explicit broadcast_rules."""
-        model = self.fit(df, _retain_fuzz=True)
-        return model.transform(self._base, broadcast_rules)
+        n = df.sparkSession.sparkContext.defaultParallelism
+        base = df.repartition(n).persist()
+        try:
+            model = self.fit(base)
+        except BaseException:
+            base.unpersist()
+            raise
+        self._base = base
+        with _RETAINED_LOCK:
+            _RETAINED_INPUTS.append(base)
+        return model.transform(base, broadcast_rules)
 
     def release(self) -> None:
         """Unpersist the training-input cache retained by

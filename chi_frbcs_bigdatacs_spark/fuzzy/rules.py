@@ -305,9 +305,12 @@ def weights_from_raw(
     cost_col=None,
     cost_scope: str = "local",
 ) -> DataFrame:
-    """O8+O9 on the aggregated statistics (tiny input — distributed or
-    a collected-and-recreated local DataFrame; the same plan serves
-    both). PCF-CS: RW = (2 s_c - stot)/stot with s_c = cost(c) * sraw_c
+    """O8+O9 on the aggregated statistics (tiny input: the persisted
+    aggregate of a collect_rules=False fit, or build_rules' lineage).
+    It is the reference semantics: the collect_rules fit computes the
+    same rows in plain Python from the collected aggregate
+    (ChiFRBCSClassifier._rules_from_raw), tested equal to this plan
+    row for row. PCF-CS: RW = (2 s_c - stot)/stot with s_c = cost(c) * sraw_c
     [FSS258 §3.2]; candidate (antecedent, class) pairs are the groups
     some example generated (n_gen > 0, O7).
 

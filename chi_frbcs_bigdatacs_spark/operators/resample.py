@@ -238,14 +238,15 @@ def _cell_topk(
     probe: bool,
     k: int,
     with_labels: bool,
+    n_rows: int,
     votes: bool = False,
-    n_rows: int | None = None,
 ) -> DataFrame:
     """Per-row top-k nearest in-neighborhood neighbors of `m`
     (id, [label,] f1..f4, bq, bp): `probe` widens the b-side to the
     3×3 cell neighborhood. votes=True emits the ENN vote aggregate
     (a_id, a_label, n_nbrs, n_disagree) instead of neighbor rows.
-    `n_rows` (the caller's already-collected row count) sizes the
+    `n_rows` (the caller's already-collected row count; required, so
+    every caller bounds its tasks) sizes the
     cell exchange so each task's numpy pass stays ~16k union rows —
     bounding per-worker transient allocation, which is what the
     first-run-after-a-heavy-query penalty scales with (measured at
@@ -296,10 +297,8 @@ def _cell_topk(
             F.col("bp").alias("cp"),
         )
     n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_part = n_shuffle
-    if n_rows is not None:
-        width = 10 if probe else 2  # a-leg + replicated b-legs
-        n_part = max(n_shuffle, -(-(n_rows * width) // 16384))
+    width = 10 if probe else 2  # a-leg + replicated b-legs
+    n_part = max(n_shuffle, -(-(n_rows * width) // 16384))
     # one keyed exchange co-locates every cell's a-rows with all its
     # candidates; per-KEY volume is bucket-bounded so no task is hot
     u = a.unionByName(b).repartition(n_part, "cq", "cp")
@@ -746,7 +745,7 @@ ENN_K = 3
 
 
 def _enn_removals(
-    spark: SparkSession, df: DataFrame, band: int, n_rows: int | None = None
+    spark: SparkSession, df: DataFrame, band: int, n_rows: int
 ) -> DataFrame:
     """Wilson-editing removal set over ANY (id, f1..f4, label) table —
     shared by the plain key and the SMOTE+ENN composite. The top-k
@@ -770,10 +769,9 @@ def q_resample_enn(
     spark: SparkSession, sf_dir: str, band: int | None = None
 ) -> DataFrame:
     df = lineitem_clf(spark, sf_dir)
-    n_total = None
+    # the row count sizes the cell exchange even for an explicit band
+    n_total = sum(int(r.n) for r in _class_counts(df))
     if band is None:
-        counts = _class_counts(df)
-        n_total = sum(int(r.n) for r in counts)
         band = tomek_f2_band(n_total)
     return _enn_removals(spark, df, band, n_rows=n_total)
 

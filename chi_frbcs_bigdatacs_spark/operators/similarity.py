@@ -22,6 +22,7 @@ Bit-parity between the two variants was asserted in the same run.
 
 from __future__ import annotations
 
+import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,18 +41,25 @@ from chi_frbcs_bigdatacs_spark.sources.testdata import load_table
 # (map-only, measured ~0 at sf0.1); the entry-point release stays as
 # a safety net for frames leaked by a crashed concurrent trainer.
 _SIM_CACHE: list[DataFrame] = []
+_SIM_CACHE_LOCK = threading.Lock()
 
 
 def _retain(df: DataFrame) -> DataFrame:
     """persist() df into the one-generation cache."""
     df = df.persist()
-    _SIM_CACHE.append(df)
+    with _SIM_CACHE_LOCK:
+        _SIM_CACHE.append(df)
     return df
 
 
 def _release_sim_cache() -> None:
-    while _SIM_CACHE:
-        _SIM_CACHE.pop().unpersist()
+    # swap the whole list out under the lock: concurrent releasers
+    # each unpersist a disjoint set, none pops an emptied list
+    with _SIM_CACHE_LOCK:
+        frames = _SIM_CACHE[:]
+        _SIM_CACHE.clear()
+    for df in frames:
+        df.unpersist()
 
 
 def _releases_sim_cache(fn):
@@ -348,19 +356,6 @@ LIMIT 10
 K_CLUSTERS = 4
 
 
-def _sqdist_col(a: str, b: str) -> Column:
-    return F.aggregate(
-        F.zip_with(
-            F.col(a),
-            F.col(b),
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def _sqdist_sql(a: str, b: str) -> str:
     return " + ".join(
         f"(CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE))"
@@ -400,13 +395,6 @@ def _sqdist_lit_sql(a: str, vec: list[float]) -> str:
         f"(x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)), "
         f"CAST('0.0' AS DOUBLE), (acc, x) -> acc + x)"
     )
-
-
-def _sqdist_lit_col(a: str, vec: list[float]) -> Column:
-    # HOF fold over the data array zipped with the literal centroid
-    # array — same left-assoc accumulation as the oracle's unrolled
-    # sum (0.0 + t1 == t1 exactly), same rationale as _dot_col.
-    return F.expr(_sqdist_lit_sql(a, vec))
 
 
 N_LLOYD = 4  # Lloyd mean-update rounds (seeds + 4 refinements)

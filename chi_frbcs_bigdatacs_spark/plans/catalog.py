@@ -101,7 +101,7 @@ def q_model_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chi_frbcs_bigdatacs_spark.fuzzy.estimator import ChiFRBCSClassifier, ChiFRBCSModel
     from chi_frbcs_bigdatacs_spark.streaming.staging import staged_dir
 
-    model = ChiFRBCSClassifier(parts=P).fit(lineitem_clf(spark, sf_dir))
+    model = ChiFRBCSClassifier(parts=P).fit(_clf_par(spark, sf_dir))
     path = staged_dir("model_rt", sf_dir, lambda d: None)
     model.save(path)  # overwrite-mode: the staged dir is reused per sf
     loaded = ChiFRBCSModel.load(spark, path)
@@ -225,14 +225,12 @@ def q_classify_holdout(spark: SparkSession, sf_dir: str) -> DataFrame:
     E1-then-E2 lifecycle with genuinely disjoint train/test data."""
     from chi_frbcs_bigdatacs_spark.fuzzy.estimator import ChiFRBCSClassifier
 
-    # only the TEST branch needs the repartition (r13): fit()
-    # repartitions train internally, but the map-only transform(test)
-    # would otherwise score on the raw 3-file scan's few tasks
+    # fit() and the map-only transform() both run on as many tasks
+    # as their input has partitions: spread the raw 3-file scan first
     df = lineitem_clf(spark, sf_dir)
-    train = df.filter(F.col("id") % N_FOLDS != 0)
-    test = df.filter(F.col("id") % N_FOLDS == 0).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    n = spark.sparkContext.defaultParallelism
+    train = df.filter(F.col("id") % N_FOLDS != 0).repartition(n)
+    test = df.filter(F.col("id") % N_FOLDS == 0).repartition(n)
     model = ChiFRBCSClassifier(parts=P).fit(train)
     return model.transform(test)
 
@@ -245,12 +243,11 @@ def q_crossval(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chi_frbcs_bigdatacs_spark.fuzzy.estimator import ChiFRBCSClassifier
 
     df = lineitem_clf(spark, sf_dir)
+    n = spark.sparkContext.defaultParallelism
     outs = []
     for k in range(N_FOLDS):
-        train = df.filter(F.col("id") % N_FOLDS != k)
-        test = df.filter(F.col("id") % N_FOLDS == k).repartition(
-            spark.sparkContext.defaultParallelism
-        )
+        train = df.filter(F.col("id") % N_FOLDS != k).repartition(n)
+        test = df.filter(F.col("id") % N_FOLDS == k).repartition(n)
         model = ChiFRBCSClassifier(parts=P).fit(train)
         outs.append(
             M.metrics_binary(model.transform(test)).select(
@@ -320,12 +317,11 @@ def q_crossval_multiclass(spark: SparkSession, sf_dir: str) -> DataFrame:
     from chi_frbcs_bigdatacs_spark.sources.testdata import embeddings_clf
 
     df = embeddings_clf(spark, sf_dir)
+    n = spark.sparkContext.defaultParallelism
     outs = []
     for k in range(N_FOLDS):
-        train = df.filter(F.col("id") % N_FOLDS != k)
-        test = df.filter(F.col("id") % N_FOLDS == k).repartition(
-            spark.sparkContext.defaultParallelism
-        )
+        train = df.filter(F.col("id") % N_FOLDS != k).repartition(n)
+        test = df.filter(F.col("id") % N_FOLDS == k).repartition(n)
         model = ChiFRBCSClassifier(parts=EMBEDDINGS_CLF_PARTITIONS).fit(train)
         outs.append(
             M.metrics_multiclass(model.transform(test)).select(
@@ -437,17 +433,16 @@ def q_hyperparam_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Granularity sweep: fit L=3/5/7 candidates on the same train
     folds, score the same held-out fold, one metrics row per L — the
     distributed analogue of the paper's partitioning study. Each fit
-    is the usual single-pass build; candidates share the cached
-    train/test split lineage."""
+    is the usual single-pass build over the same repartitioned train
+    split; candidates score the same test split."""
     from functools import reduce as _reduce
 
     from chi_frbcs_bigdatacs_spark.fuzzy.estimator import ChiFRBCSClassifier
 
     df = lineitem_clf(spark, sf_dir)
-    train = df.filter(F.col("id") % N_FOLDS != 0)
-    test = df.filter(F.col("id") % N_FOLDS == 0).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    n = spark.sparkContext.defaultParallelism
+    train = df.filter(F.col("id") % N_FOLDS != 0).repartition(n)
+    test = df.filter(F.col("id") % N_FOLDS == 0).repartition(n)
     outs = []
     for lab in SWEEP_LABELS:
         parts = _FP(features=P.features, num_labels=lab)
