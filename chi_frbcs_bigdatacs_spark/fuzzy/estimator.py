@@ -217,13 +217,15 @@ _KERNEL_CHUNK_BYTES = 16 << 20
 class _RuleKernel:
     """The numpy rule-scoring kernel, shipped to tasks in the
     mapInPandas closure: the positive-weight rules as arrays sorted by
-    (l1..ld, cls), plus the feature partitions. Evaluates the
+    (l1..ld, cls), plus the feature partitions. NULL-weight rules (a
+    cell whose cost-weighted support sums to 0) are dropped, as the
+    join scorer's `weight > 0` drops them. Evaluates the
     identical IEEE chain as fuzzify + the cell mu product of the join
     scorer (pinned by the scorer parity tests)."""
 
     def __init__(self, parts: FuzzyPartitions, rules_rows: list[tuple]):
         d = len(parts.features)
-        rules = sorted(r for r in rules_rows if r[d + 1] > 0)
+        rules = sorted(r for r in rules_rows if r[d + 1] is not None and r[d + 1] > 0)
         self.rl = np.array([r[:d] for r in rules], dtype=np.int64).reshape(-1, d) - 1
         self.rcls = np.array([r[d] for r in rules], dtype=np.int64)
         self.rw = np.array([r[d + 1] for r in rules], dtype=np.float64)

@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chi_frbcs_bigdatacs_spark.plans.registry import register
+from chi_frbcs_bigdatacs_spark.session import batch_shuffle_partitions
 from chi_frbcs_bigdatacs_spark.sources.testdata import LINEITEM_CLF_SQL, lineitem_clf
 
 RS_HASH_A = 2654435761  # Knuth multiplicative constant
@@ -296,7 +297,7 @@ def _cell_topk(
             F.col("bq").alias("cq"),
             F.col("bp").alias("cp"),
         )
-    n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_shuffle = batch_shuffle_partitions(spark)
     width = 10 if probe else 2  # a-leg + replicated b-legs
     n_part = max(n_shuffle, -(-(n_rows * width) // 16384))
     # one keyed exchange co-locates every cell's a-rows with all its

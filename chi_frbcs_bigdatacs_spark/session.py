@@ -5,6 +5,27 @@ setting is the one we'd ship on a 1000-executor cluster: AQE on
 (runtime shuffle-partition coalescing + skew-join splitting),
 broadcast threshold high enough that dimension tables and rule bases
 broadcast, Arrow enabled for the few pandas-interop paths.
+
+Two shuffle widths, because batch and streaming plan their exchanges
+differently:
+
+- Batch width: `spark.sql.adaptive.coalescePartitions.initialPartitionNum`
+  (the `shuffle_partitions` argument, else `$SPARK_GRAFT_SHUFFLE`,
+  else 32). With AQE and partition coalescing on, Spark's
+  `SQLConf.numShufflePartitions` returns it, so every batch exchange
+  starts at this width and AQE coalesces it down at runtime.
+  `batch_shuffle_partitions` reads it back for code that sizes its own
+  exchange.
+- State width: `spark.sql.shuffle.partitions`, one partition per core
+  (`sparkContext.defaultParallelism`). With the batch width set apart,
+  only streaming reads it: Structured Streaming runs each query on a
+  session clone with AQE off, so nothing coalesces its exchanges, and
+  every stateful operator runs this many state-store tasks per
+  micro-batch whatever the input size. The query writes the value into
+  its checkpoint's offset log, and a restarted query keeps the width it
+  started with. It is set on the returned session after the
+  SparkContext is up; a `newSession()` starts from the builder settings
+  (same batch width, Spark's default state width).
 """
 
 from __future__ import annotations
@@ -12,6 +33,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_INITIAL_PARTITION_NUM = "spark.sql.adaptive.coalescePartitions.initialPartitionNum"
 
 
 def get_spark(
@@ -32,7 +55,7 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config(_INITIAL_PARTITION_NUM, str(shuffle_partitions))
         # Rule bases / dims are tiny; make sure they broadcast.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -40,4 +63,23 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
+    return spark
+
+
+def batch_shuffle_partitions(spark: SparkSession) -> int:
+    """The width batch exchanges start from, as Spark's
+    `SQLConf.numShufflePartitions` computes it: the AQE initial
+    partition number when AQE coalescing is on and it is set, else
+    `spark.sql.shuffle.partitions`. Sessions not made by `get_spark`
+    fall to the second branch."""
+    conf = spark.conf
+    initial = conf.get(_INITIAL_PARTITION_NUM, None)
+    if (
+        initial is not None
+        and conf.get("spark.sql.adaptive.enabled").lower() == "true"
+        and conf.get("spark.sql.adaptive.coalescePartitions.enabled").lower() == "true"
+    ):
+        return int(initial)
+    return int(conf.get("spark.sql.shuffle.partitions"))

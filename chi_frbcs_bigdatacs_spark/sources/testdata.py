@@ -68,7 +68,12 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
       older session): truncate nanos to micros with exact integer
       division, matching DuckDB's ns->us cast.
     """
-    df = read_events_raw(spark, sf_dir)
+    return normalize_events_ts(read_events_raw(spark, sf_dir))
+
+
+def normalize_events_ts(df: DataFrame) -> DataFrame:
+    """The `ts` rule of load_events, for any events frame read raw
+    (batch or stream)."""
     ts_type = df.schema["ts"].dataType.typeName()
     if ts_type == "timestamp":
         return df

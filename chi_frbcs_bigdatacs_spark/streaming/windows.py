@@ -26,36 +26,40 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from chi_frbcs_bigdatacs_spark.plans.registry import register
+from chi_frbcs_bigdatacs_spark.sources.testdata import (
+    load_events,
+    normalize_events_ts,
+    read_events_raw,
+)
 from chi_frbcs_bigdatacs_spark.streaming.staging import staged_dir
 
 
-def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events as a bounded stream: stage the parquet into a source dir
-    (memoized per sf_dir, removed at exit) and readStream it.
-
-    `ts` is normalized exactly as the batch loader does (type-adaptive:
-    pass-through for timestamp[us], nanos->micros for legacy long),
-    then cast to TIMESTAMP — watermarks and window() reject
-    TIMESTAMP_NTZ. The session timezone is UTC so the cast is a pure
-    retag, value-identical to the batch/oracle reading.
-    """
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    src = staged_dir(
-        "events",
-        sf_dir,
-        lambda d: shutil.copy(f"{sf_dir}/events.parquet", f"{d}/events.parquet"),
-    )
+def _events_stream_from(spark: SparkSession, sf_dir: str, src: str) -> DataFrame:
+    """The events files in source dir `src` as a stream, one file per
+    micro-batch. The schema is sf_dir's events schema as the batch
+    reader sees it (read_events_raw, with its TIMESTAMP(NANOS) guard),
+    and `ts` gets the batch loader's rule (normalize_events_ts): a
+    plain TIMESTAMP, value-identical to the batch/oracle reading, which
+    watermarks and window() accept where they reject TIMESTAMP_NTZ."""
+    batch = read_events_raw(spark, sf_dir)
     stream = (
         spark.readStream.schema(batch.schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    ts_type = batch.schema["ts"].dataType.typeName()
-    if ts_type in ("long", "bigint"):
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return normalize_events_ts(stream)
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events as a bounded stream: the parquet staged into a source dir
+    (memoized per sf_dir, removed at exit) and read back as one
+    micro-batch."""
+    src = staged_dir(
+        "events",
+        sf_dir,
+        lambda d: shutil.copy(f"{sf_dir}/events.parquet", f"{d}/events.parquet"),
+    )
+    return _events_stream_from(spark, sf_dir, src)
 
 
 def _run_to_memory(agg: DataFrame, mode: str = "complete") -> DataFrame:
@@ -301,21 +305,8 @@ def _events_tsorder_src(
 def _events_stream_ordered(
     spark: SparkSession, sf_dir: str, n_files: int = N_TS_ORDER_FILES
 ) -> DataFrame:
-    from chi_frbcs_bigdatacs_spark.sources.testdata import read_events_raw
-
-    batch = read_events_raw(spark, sf_dir)
     src = _events_tsorder_src(spark, sf_dir, n_files)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    ts_type = batch.schema["ts"].dataType.typeName()
-    if ts_type in ("long", "bigint"):
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    return _events_stream_from(spark, sf_dir, src)
 
 
 def q_stream_stream_join(
@@ -392,7 +383,6 @@ def q_stream_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         hll_estimate,
         hll_registers,
     )
-    from chi_frbcs_bigdatacs_spark.sources.testdata import load_events
 
     # 6-file staged source -> 6 micro-batches: the register state is
     # genuinely MAINTAINED across batches, not built in one shot
@@ -431,27 +421,15 @@ def _recovery_phase(
     import os
     import shutil as _sh
 
-    from chi_frbcs_bigdatacs_spark.sources.testdata import read_events_raw
-
-    batch = read_events_raw(spark, sf_dir)
     full = _events_tsorder_src(spark, sf_dir, N_RECOVERY_FILES)
     src, sink, ckpt = f"{work}/src", f"{work}/data", f"{work}/ckpt"
     os.makedirs(src, exist_ok=True)
     for f in sorted(os.listdir(full))[:upto]:
         if not os.path.exists(f"{src}/{f}"):
             _sh.copy2(f"{full}/{f}", f"{src}/{f}")
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    ts_type = batch.schema["ts"].dataType.typeName()
-    if ts_type in ("long", "bigint"):
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     q = (
-        stream.withWatermark("ts", "1 hour")
+        _events_stream_from(spark, sf_dir, src)
+        .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("hour"), "event_type", "n")
@@ -582,25 +560,9 @@ def _events_late_src(spark: SparkSession, sf_dir: str) -> str:
 
 
 def q_stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from chi_frbcs_bigdatacs_spark.sources.testdata import (
-        load_events,
-        read_events_raw,
-    )
-
-    batch = read_events_raw(spark, sf_dir)
-    src = _events_late_src(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    ts_type = batch.schema["ts"].dataType.typeName()
-    if ts_type in ("long", "bigint"):
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
     agg = (
-        stream.withWatermark("ts", f"{LATE_WM_DELAY_HOURS} hour")
+        _events_stream_from(spark, sf_dir, _events_late_src(spark, sf_dir))
+        .withWatermark("ts", f"{LATE_WM_DELAY_HOURS} hour")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.end").alias("wend"), "event_type", "n")

@@ -52,6 +52,26 @@ def test_score_out_of_range_values(spark):
     assert all(r["prediction"] in (0, 1) for r in out)
 
 
+@pytest.mark.parametrize("frm", ["wr", "ac"])
+def test_null_weight_rules_score_as_the_join_does(spark, frm):
+    """A cost dict whose costs sum to 0 on a cell gives its rule a NULL
+    weight (Spark's x / 0). The numpy kernel drops it, as the join
+    scorer's weight > 0 does, and both score the same."""
+    from chi_frbcs_bigdatacs_spark.fuzzy.estimator import ChiFRBCSClassifier
+    from chi_frbcs_bigdatacs_spark.fuzzy.partitions import LINEITEM_CLF_PARTITIONS
+    from chi_frbcs_bigdatacs_spark.sources.testdata import lineitem_clf
+
+    df = lineitem_clf(spark, SF_SMALL).filter(F.col("id") % 16 == 0)
+    model = ChiFRBCSClassifier(
+        parts=LINEITEM_CLF_PARTITIONS, frm=frm, cost_mode={0: 0.0, 1: 0.0}
+    ).fit(df)
+    assert any(r[-1] is None for r in model.rules_rows)
+    auto = model.transform(df)
+    assert "MapInPandas" in auto._jdf.queryExecution().executedPlan().toString()
+    joined = model.transform(df, broadcast_rules=True)
+    assert sorted(auto.collect()) == sorted(joined.collect())
+
+
 def test_media_fixture_is_ascii(spark):
     """The media oracles (media_decode byte features, media_resize
     char-indexed sampling) are byte-exact only while documents.text is

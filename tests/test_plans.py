@@ -572,3 +572,100 @@ def test_wcc_star_phase_is_two_exchanges_no_cartesian(spark):
         assert "CartesianProduct" not in p and "NestedLoop" not in p
         assert p.count("partial_min") == 1, "min-agg re-executed or lost combine"
         assert p.count("Exchange hashpartitioning") <= 3, p[:1500]
+
+
+# --- shuffle widths: batch keeps its AQE width, state takes the cores ---------
+def test_batch_exchange_plans_at_the_batch_width(spark):
+    """get_spark sets the batch width (shuffle_partitions=8 here) as
+    AQE's initial partition number and the plain setting, which only
+    streaming reads, to the core count: a batch groupBy still plans
+    its exchange at the batch width."""
+    import re
+
+    from pyspark.sql import functions as F
+
+    from chi_frbcs_bigdatacs_spark.session import batch_shuffle_partitions
+
+    cores = spark.sparkContext.defaultParallelism
+    assert cores != 8  # else the two widths could not be told apart
+    assert spark.conf.get("spark.sql.shuffle.partitions") == str(cores)
+    assert batch_shuffle_partitions(spark) == 8
+    g = spark.range(1000).groupBy((F.col("id") % 7).alias("k")).count()
+    p = g._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"Exchange hashpartitioning\([^)]*, 8\)", p), p
+    # a session without the AQE initial width falls back to the plain
+    # setting, as Spark's SQLConf.numShufflePartitions does
+    other = spark.newSession()
+    other.conf.unset("spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+    other.conf.set("spark.sql.shuffle.partitions", "5")
+    assert batch_shuffle_partitions(other) == 5
+
+
+def test_stateful_stream_runs_one_state_store_per_core(spark):
+    """Structured Streaming turns AQE off, so a stateful operator runs
+    spark.sql.shuffle.partitions state-store tasks per micro-batch:
+    one per core, not the batch width."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from chi_frbcs_bigdatacs_spark.streaming.windows import _events_stream
+
+    name = f"chi_width_{uuid.uuid4().hex[:12]}"
+    q = (
+        _events_stream(spark, SF_SMALL)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .count()
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+        spark.catalog.dropTempView(name)
+    assert progress
+    for p in progress:
+        ops = p["stateOperators"]
+        assert ops[0]["numShufflePartitions"] == spark.sparkContext.defaultParallelism
+
+
+def test_checkpoint_recovery_restores_state_at_the_state_width(spark, duck, tmp_path):
+    """stream_checkpoint_recovery's two phases under the state width:
+    both record it in the checkpoint's offset log, the state store has
+    one partition per core, and the restarted query completes the
+    windows that straddle the restart, so the sink equals the closed-
+    window oracle."""
+    import json
+    import os
+
+    from chi_frbcs_bigdatacs_spark.streaming.windows import (
+        N_RECOVERY_FILES,
+        RECOVERY_PHASE1,
+        STREAM_CHECKPOINT_RECOVERY_SQL,
+        _recovery_phase,
+    )
+    from tests.parity import compare
+
+    cores = spark.sparkContext.defaultParallelism
+    work = str(tmp_path / "rec")
+    _recovery_phase(spark, SF_SMALL, work, RECOVERY_PHASE1)
+    n1 = spark.read.parquet(f"{work}/data").count()
+    _recovery_phase(spark, SF_SMALL, work, N_RECOVERY_FILES)
+    final = spark.read.parquet(f"{work}/data")
+    assert 0 < n1 < final.count()
+    offsets = f"{work}/ckpt/offsets"
+    batches = [f for f in os.listdir(offsets) if f.isdigit()]
+    assert len(batches) >= N_RECOVERY_FILES
+    for b in batches:
+        with open(f"{offsets}/{b}") as fh:
+            meta = json.loads(fh.read().splitlines()[1])
+        assert meta["conf"]["spark.sql.shuffle.partitions"] == str(cores)
+    parts = os.listdir(f"{work}/ckpt/state/0")
+    assert sorted(int(p) for p in parts if p.isdigit()) == list(range(cores))
+    compare(final, duck.execute(STREAM_CHECKPOINT_RECOVERY_SQL).df(), label="recovery")
