@@ -17,20 +17,23 @@ differently:
   `batch_shuffle_partitions` reads it back for code that sizes its own
   exchange.
 - State width: `spark.sql.shuffle.partitions`, one partition per core
-  (`sparkContext.defaultParallelism`). With the batch width set apart,
-  only streaming reads it: Structured Streaming runs each query on a
-  session clone with AQE off, so nothing coalesces its exchanges, and
-  every stateful operator runs this many state-store tasks per
-  micro-batch whatever the input size. The query writes the value into
-  its checkpoint's offset log, and a restarted query keeps the width it
-  started with. It is set on the returned session after the
-  SparkContext is up; a `newSession()` starts from the builder settings
-  (same batch width, Spark's default state width).
+  of a `local[N]` master (N, which is `sparkContext.defaultParallelism`;
+  `local[*]` is first resolved to the cores this process may run on).
+  With the batch width set apart, only streaming reads it: Structured
+  Streaming runs each query on a session clone with AQE off, so nothing
+  coalesces its exchanges, and every stateful operator runs this many
+  state-store tasks per micro-batch whatever the input size. The query
+  writes the value into its checkpoint's offset log, and a restarted
+  query keeps the width it started with. Both widths are builder
+  settings, so a `newSession()` gets them too. Any other master keeps
+  Spark's default state width; submit it with
+  `spark.sql.shuffle.partitions` set to the executor core count.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
 
@@ -45,6 +48,8 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{cpus}]" if cpus else "local[*]"
+    if master == "local[*]":
+        master = f"local[{len(os.sched_getaffinity(0))}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     builder = (
@@ -63,9 +68,10 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    spark = builder.getOrCreate()
-    spark.conf.set("spark.sql.shuffle.partitions", str(spark.sparkContext.defaultParallelism))
-    return spark
+    local = re.fullmatch(r"local\[(\d+)\]", master)
+    if local:
+        builder = builder.config("spark.sql.shuffle.partitions", local[1])
+    return builder.getOrCreate()
 
 
 def batch_shuffle_partitions(spark: SparkSession) -> int:

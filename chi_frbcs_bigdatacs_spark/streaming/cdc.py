@@ -42,13 +42,19 @@ from chi_frbcs_bigdatacs_spark.operators.lakehouse import (
     _target,
 )
 from chi_frbcs_bigdatacs_spark.plans.registry import register
-from chi_frbcs_bigdatacs_spark.streaming.staging import staged_dir
+from chi_frbcs_bigdatacs_spark.streaming.staging import (
+    run_to_memory,
+    staged_dir,
+    stream_files,
+    write_ordered_parts,
+)
 
 N_CDC_SHARDS = 32
 # 2 = minimum replay width that still hands state across batches; the
 # skewed-split invariance tests stage their own layouts (r16, VERDICT
 # r15 #7 — per-micro-batch fixed cost dominates these keys at sf0.1).
 N_CDC_FILES = 2
+CDC_SCHEMA = "o_orderkey long, op string, c_status string, c_price double"
 
 
 def _cdc_src(spark: SparkSession, sf_dir: str) -> str:
@@ -141,21 +147,12 @@ def _cdc_update(
         yield pd.DataFrame(out)
 
 
-def q_stream_merge_upsert(
-    spark: SparkSession, sf_dir: str, staged_src: str | None = None
-) -> DataFrame:
-    """`staged_src` lets tests replay a skewed/adversarial file split
-    (one file = one micro-batch) to prove arrival-order invariance."""
-    src = staged_src or _cdc_src(spark, sf_dir)
-    schema = "o_orderkey long, op string, c_status string, c_price double"
-    cdc = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withColumn("shard", F.col("o_orderkey") % N_CDC_SHARDS)
-    )
-
-    merged = cdc.groupBy("shard").applyInPandasWithState(
+def _cdc_merge(cdc: DataFrame, mode: str) -> DataFrame:
+    """The CDC merge operator over a CDC_SCHEMA stream: `_cdc_update`
+    per o_orderkey % N_CDC_SHARDS shard, emitting in output mode
+    `mode`."""
+    shards = cdc.withColumn("shard", F.col("o_orderkey") % N_CDC_SHARDS)
+    return shards.groupBy("shard").applyInPandasWithState(
         _cdc_update,
         outputStructType=(
             "o_orderkey long, n_seen int, o_orderstatus string,"
@@ -166,23 +163,25 @@ def q_stream_merge_upsert(
             " bprice array<double>, opc array<string>,"
             " ostat array<string>, oprice array<double>"
         ),
-        outputMode="update",
+        outputMode=mode,
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_cdc_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        merged.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
+
+
+def q_stream_merge_upsert(
+    spark: SparkSession, sf_dir: str, staged_src: str | None = None
+) -> DataFrame:
+    """`staged_src` lets tests replay a skewed/adversarial file split
+    (one file = one micro-batch) to prove arrival-order invariance."""
+    merged = _cdc_merge(
+        stream_files(spark, CDC_SCHEMA, staged_src or _cdc_src(spark, sf_dir)),
+        "update",
     )
-    q.awaitTermination()
     # final = the max-n_seen emission per key (n_seen strictly
     # increases per key across emissions), then drop deleted /
     # not-yet-material rows
     final = (
-        spark.table(name)
+        run_to_memory(merged, "update")
         .groupBy("o_orderkey")
         .agg(
             F.max(
@@ -224,8 +223,6 @@ CDC_RECOVERY_PHASE1 = 2
 
 def _cdc_recovery_src(spark: SparkSession, sf_dir: str) -> str:
     def build(d: str) -> None:
-        import os
-
         o = spark.read.parquet(f"{sf_dir}/orders.parquet")
         base = _target(o).select(
             "o_orderkey",
@@ -244,11 +241,7 @@ def _cdc_recovery_src(spark: SparkSession, sf_dir: str) -> str:
             chg[chg["o_orderkey"] % 2 == 0],
             chg[chg["o_orderkey"] % 2 == 1],
         ]
-        t0 = 1_700_000_000
-        for i, p in enumerate(parts):
-            fp = f"{d}/part-{i:02d}.parquet"
-            p.reset_index(drop=True).to_parquet(fp, index=False)
-            os.utime(fp, (t0 + 60 * i, t0 + 60 * i))
+        write_ordered_parts(d, parts)
 
     return staged_dir("merge_cdc_recovery", sf_dir, build)
 
@@ -269,29 +262,9 @@ def _cdc_recovery_phase(
     for f in sorted(os.listdir(full))[:upto]:
         if not os.path.exists(f"{src}/{f}"):
             _sh.copy2(f"{full}/{f}", f"{src}/{f}")
-    schema = "o_orderkey long, op string, c_status string, c_price double"
-    cdc = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withColumn("shard", F.col("o_orderkey") % N_CDC_SHARDS)
-    )
-    merged = cdc.groupBy("shard").applyInPandasWithState(
-        _cdc_update,
-        outputStructType=(
-            "o_orderkey long, n_seen int, o_orderstatus string,"
-            " o_totalprice double, merge_action string, present boolean"
-        ),
-        stateStructType=(
-            "keys array<long>, hasb array<boolean>, bstat array<string>,"
-            " bprice array<double>, opc array<string>,"
-            " ostat array<string>, oprice array<double>"
-        ),
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
     q = (
-        merged.writeStream.format("parquet")
+        _cdc_merge(stream_files(spark, CDC_SCHEMA, src), "append")
+        .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", ckpt)
         .outputMode("append")
@@ -377,28 +350,13 @@ def q_stream_mv_refresh(
     )
 
     src = staged_src or _mv_cdc_src(spark, sf_dir)
-    schema = "o_orderkey long, op string, c_status string, c_price double"
-    cdc = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .withColumnRenamed("o_orderkey", "c_key")
-    )
+    cdc = stream_files(spark, CDC_SCHEMA, src).withColumnRenamed("o_orderkey", "c_key")
     t = _target(spark.read.parquet(f"{sf_dir}/orders.parquet"))
     delta_rows = mv_delta_rows(mv_before_images(t, cdc))
     delta = delta_rows.groupBy("grp").agg(
         F.sum("dn").alias("dn"), F.sum("dp").alias("dp")
     )
-    name = f"chi_mv_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        delta.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return mv_apply_delta(mv_base(t), spark.table(name))
+    return mv_apply_delta(mv_base(t), run_to_memory(delta, "complete"))
 
 
 # --- streaming MV maintenance with MAX retraction (r14) -----------------------
@@ -456,28 +414,15 @@ def q_stream_mv_refresh_minmax(
 
     src = staged_src or _mv_minmax_cdc_src(spark, sf_dir)
     schema = "c_key long, op string, c_cust long, c_price double"
-    cdc = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    cdc = stream_files(spark, schema, src)
     t = _target(spark.read.parquet(f"{sf_dir}/orders.parquet"))
     delta = mv_minmax_delta_agg(
         mv_minmax_delta_rows(mv_minmax_before_images(t, cdc))
     )
-    name = f"chi_mvmm_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        delta.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     c = spark.read.schema(schema).parquet(src)
     return mv_apply_delta_minmax(
         mv_base_minmax(t),
-        spark.table(name),
+        run_to_memory(delta, "complete"),
         t,
         c,
         aff_broadcast_max=aff_broadcast_max,

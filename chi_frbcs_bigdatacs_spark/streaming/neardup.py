@@ -32,7 +32,6 @@ bucket key, so state is partition-parallel and never driver-side.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -51,6 +50,7 @@ from chi_frbcs_bigdatacs_spark.operators.dedup_near import (
     _shingles_col,
 )
 from chi_frbcs_bigdatacs_spark.plans.registry import register
+from chi_frbcs_bigdatacs_spark.streaming.staging import run_to_memory
 from chi_frbcs_bigdatacs_spark.streaming.stateful import _documents_idorder_stream
 
 
@@ -113,15 +113,7 @@ def q_stream_dedup_minhash(
     set is invariant under ANY skewed split of the corpus — bucket
     membership accumulates commutatively, so arrival order can't
     change which pairs exist."""
-    if staged_src is not None:
-        base = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        src_stream = (
-            spark.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged_src)
-        )
-    else:
-        src_stream = _documents_idorder_stream(spark, sf_dir)
+    src_stream = _documents_idorder_stream(spark, sf_dir, staged_src)
     docs = src_stream.select(
         "doc_id", _shingles_col().alias("shingles")
     ).filter(F.size("shingles") > 0)
@@ -173,22 +165,13 @@ def q_stream_dedup_minhash(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_neardup_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        cand.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # candidate pairs collide once per shared band -> dedup, then the
     # stateless Jaccard verify against the corpus shingle sets — the
     # identical tail of the batch operator (in production this is a
     # stream-static join against the document store).
     from chi_frbcs_bigdatacs_spark.operators.dedup_near import _docs
 
-    pairs = spark.table(name).distinct()
+    pairs = run_to_memory(cand, "append").distinct()
     bdocs = _docs(spark, sf_dir)
     da = bdocs.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sha"))
     db = bdocs.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("shb"))
@@ -251,15 +234,7 @@ def _stream_substr_hits(
     of the accounting and trim twins."""
     from chi_frbcs_bigdatacs_spark.operators.dedup_near import SUBSTR_K
 
-    if staged_src is not None:
-        base = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        src_stream = (
-            spark.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged_src)
-        )
-    else:
-        src_stream = _documents_idorder_stream(spark, sf_dir)
+    src_stream = _documents_idorder_stream(spark, sf_dir, staged_src)
     grams = (
         src_stream.select(
             "doc_id", "text", F.length("text").alias("n_chars")
@@ -363,16 +338,7 @@ def _stream_substr_hits(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_substr_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        hits.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(hits, "append")
 
 
 def q_stream_dedup_substring(

@@ -1,12 +1,20 @@
-"""M5 — custom stateful streaming operator via applyInPandasWithState.
+"""M5 — custom stateful streaming operators via applyInPandasWithState.
 
-A per-user running event counter: state (the count so far) persists
-across micro-batches; the staged source is split into multiple files
-with maxFilesPerTrigger=1 so the stream REALLY processes several
-micro-batches and the state handoff is exercised (not a single-batch
-degenerate run). The final per-user count must equal the batch
-groupBy count — which is the DuckDB oracle. Counts are monotone, so
-"final" = max over the update-mode sink rows.
+Each key here is the streaming twin of a batch key: a staged source is
+replayed one file per micro-batch, a pandas update function carries
+its state across micro-batches, and the final sink rows reduce to the
+batch answer — which is the DuckDB oracle. The staged sources are
+split into several files, so the state handoff is exercised (not a
+single-batch degenerate run). Emissions are monotone per key, so
+"final" is the max over the update-mode sink rows, or the append-mode
+rows themselves.
+
+Streaming policy is not restated here: `staging.stream_files` is the
+source, `staging.run_to_memory` runs each query into its memory sink
+(availableNow) and drops the sink's view, and the state width is the
+session's `spark.sql.shuffle.partitions` (one state-store task per
+core, see session.py). A key only picks its source, its state
+function and its output mode.
 
 At scale this is the template for incremental rule-statistic
 maintenance: state keyed by user/antecedent, partition-parallel,
@@ -15,7 +23,6 @@ evicted by timeout.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterable, Iterator
 
 import pandas as pd
@@ -25,7 +32,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from chi_frbcs_bigdatacs_spark.plans.registry import register
-from chi_frbcs_bigdatacs_spark.streaming.staging import staged_dir
+from chi_frbcs_bigdatacs_spark.streaming.staging import (
+    run_to_memory,
+    staged_dir,
+    stream_files,
+    write_ordered_parts,
+)
 
 # Replay width (r16, VERDICT r15 #7): every run of a replay-staged
 # stream pays a fixed per-micro-batch cost (incremental planning,
@@ -56,12 +68,7 @@ def _staged_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(d),
     )
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    return stream
+    return stream_files(spark, batch.schema, src)
 
 
 def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -84,19 +91,10 @@ def q_stream_stateful_count(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_state_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        counted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # update-mode sink holds one row per (user, batch); counts are
     # monotone so the final state is the max
     return (
-        spark.table(name)
+        run_to_memory(counted, "update")
         .groupBy("user_id")
         .agg(F.max("n").alias("n_events"))
     )
@@ -139,32 +137,19 @@ def q_stream_rule_stats(
         .write.mode("overwrite")
         .parquet(d),
     )
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    stream = stream_files(spark, batch.schema, src)
     ants = [R.label_col(i) for i in range(len(P.features))]
     cells = R.candidate_cells(R.fuzzify(stream, P), P)
     agg = cells.groupBy(*ants, F.col("label").alias("cls")).agg(
         F.sum("mu").alias("s_run")
     )
-    name = f"chi_rulestat_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # restrict to data-touched antecedents (cells some example argmax-
     # maps to) — the set the batch build keys rules on (O7)
     touched = (
         R.with_antecedent(R.fuzzify(batch, P), P).select(*ants).distinct()
     )
     return (
-        spark.table(name)
+        run_to_memory(agg, "update")
         .groupBy(*ants, "cls")
         .agg(F.round(F.max("s_run"), 6).alias("s"))
         .join(F.broadcast(touched), ants, "left_semi")
@@ -224,17 +209,8 @@ def q_stream_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_latest_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        latest.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     final = (
-        spark.table(name)
+        run_to_memory(latest, "update")
         .groupBy("user_id")
         .agg(
             F.max_by(
@@ -264,33 +240,29 @@ def q_stream_latest_event(spark: SparkSession, sf_dir: str) -> DataFrame:
 N_DOC_ORDER_FILES = 2  # minimum real state handoff; see N_SOURCE_FILES note
 
 
-def _documents_idorder_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _documents_idorder_stream(
+    spark: SparkSession, sf_dir: str, staged_src: str | None = None
+) -> DataFrame:
     """documents as a doc_id-ordered file-per-micro-batch stream:
     RANGE-partitioned by doc_id into N_DOC_ORDER_FILES parquet files
-    whose mtimes force in-order pickup (maxFilesPerTrigger=1)."""
+    whose mtimes force in-order pickup (maxFilesPerTrigger=1).
+    `staged_src` replays a caller-staged layout of documents files
+    instead (one file = one micro-batch)."""
     batch = spark.read.parquet(f"{sf_dir}/documents.parquet")
 
     def build(d: str) -> None:
-        import os
-
         df = (
             pd.read_parquet(f"{sf_dir}/documents.parquet")
             .sort_values("doc_id", kind="mergesort")
             .reset_index(drop=True)
         )
         step = -(-len(df) // N_DOC_ORDER_FILES)
-        base = 1_700_000_000
-        for i in range(N_DOC_ORDER_FILES):
-            p = f"{d}/part-{i:02d}.parquet"
-            df.iloc[i * step : (i + 1) * step].to_parquet(p, index=False)
-            os.utime(p, (base + i * 60, base + i * 60))
+        write_ordered_parts(
+            d, [df.iloc[i * step : (i + 1) * step] for i in range(N_DOC_ORDER_FILES)]
+        )
 
-    src = staged_dir("documents_idorder", sf_dir, build)
-    return (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    src = staged_src or staged_dir("documents_idorder", sf_dir, build)
+    return stream_files(spark, batch.schema, src)
 
 
 def q_stream_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -340,16 +312,7 @@ def q_stream_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_pack_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        packed.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return run_to_memory(packed, "append")
 
 
 # --- incremental inverted-index maintenance --------------------------------
@@ -423,17 +386,8 @@ def q_stream_index_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_idx_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        maintained.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(maintained, "update")
         .groupBy("term")
         .agg(F.max("df").alias("df"), F.max("sum_tf").alias("sum_tf"))
     )
@@ -486,17 +440,8 @@ def q_stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_psi_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        counted.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     final = (
-        spark.table(name)
+        run_to_memory(counted, "update")
         .groupBy("event_type")
         .agg(F.max("n_a").alias("n_a"), F.max("n_b").alias("n_b"))
     )
@@ -544,17 +489,8 @@ def q_stream_audit_freshness(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_fresh_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        latest.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     final = (
-        spark.table(name)
+        run_to_memory(latest, "update")
         .groupBy("event_type")
         .agg(F.max("latest_us").alias("latest_us"))
     )
@@ -642,17 +578,8 @@ def q_stream_path_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_path_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        trans.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(trans, "append")
         .groupBy("prev_type", "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -732,22 +659,13 @@ def q_stream_twap(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_twap_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        acc.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # n_intervals is monotone -> final = max-n emission per type; the
     # projection mirrors the batch expression exactly. Types with a
     # single observation close no interval (n=0, den=0) and are
     # dropped, matching the batch key's dt IS NOT NULL filter — a
     # bare division would emit twap=NaN for them (ADVICE r7).
     final = (
-        spark.table(name)
+        run_to_memory(acc, "update")
         .groupBy("event_type")
         .agg(F.max(F.struct("n_intervals", "num_str", "den")).alias("s"))
         .filter(F.col("s.n_intervals") > 0)
@@ -797,25 +715,13 @@ def q_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(dd),
     )
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+    assigned = stream_files(spark, batch.schema, src).select(
+        assign_cells_col(cent).alias("k")
     )
-    assigned = stream.select(assign_cells_col(cent).alias("k"))
     counts = assigned.groupBy("k").agg(F.count(F.lit(1)).alias("n_vecs"))
-    name = f"chi_ivf_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        counts.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     cents = spark.read.parquet(f"{d}/centroids")
     return (
-        spark.table(name)
+        run_to_memory(counts, "complete")
         .join(cents, "k")
         .select("k", "n_vecs", F.element_at("cvec", 1).alias("c1"))
     )
@@ -859,11 +765,8 @@ def q_stream_anomaly_detect(
 
     src = _events_tsorder_src(spark, sf_dir, n_files or N_TS_ORDER_FILES)
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
-    ev = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-        .select("event_id", "event_type", "ts", "value")
+    ev = stream_files(spark, batch.schema, src).select(
+        "event_id", "event_type", "ts", "value"
     )
 
     def update(
@@ -909,16 +812,8 @@ def q_stream_anomaly_detect(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_anom_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        flagged.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name).select("event_id", "event_type", "value", "n_prior")
+    sunk = run_to_memory(flagged, "update")
+    return sunk.select("event_id", "event_type", "value", "n_prior")
 
 
 def q_stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -941,9 +836,7 @@ def q_stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = _events_tsorder_src(spark, sf_dir)
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     ev = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
+        stream_files(spark, batch.schema, src)
         .filter(F.col("event_type") == SCD2_EVENT)
         .select("user_id", "event_id", "ts", "value")
     )
@@ -1004,19 +897,10 @@ def q_stream_scd2_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_scd2_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        dim.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     # a version appears once per lifecycle transition; max(valid_to)
     # keeps the closed value (NULL only for the never-closed current)
     final = (
-        spark.table(name)
+        run_to_memory(dim, "update")
         .groupBy("user_id", "version")
         .agg(
             F.max("valid_from").alias("valid_from"),
@@ -1157,17 +1041,8 @@ def q_stream_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_ohlc_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        acc.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     final = (
-        spark.table(name)
+        run_to_memory(acc, "update")
         .groupBy("event_type", "bucket_us")
         .agg(F.max(F.struct("n", "open", "high", "low", "close")).alias("s"))
     )
@@ -1207,16 +1082,7 @@ def q_stream_sketch_kmv(
         kmv_pair_estimates,
     )
 
-    if staged_src is not None:
-        base = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        src = (
-            spark.readStream.schema(base.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(staged_src)
-        )
-    else:
-        src = _documents_idorder_stream(spark, sf_dir)
-    docs = src.select("lang", "text")
+    docs = _documents_idorder_stream(spark, sf_dir, staged_src).select("lang", "text")
 
     def update(
         key: tuple, pdfs: Iterable[pd.DataFrame], state: GroupState
@@ -1255,16 +1121,7 @@ def q_stream_sketch_kmv(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_kmv_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        sketches.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sunk = spark.table(name)
+    sunk = run_to_memory(sketches, "append")
     # renamed join keys sidestep the memory-sink self-join
     # conflicting-attribute trap
     last = sunk.groupBy(F.col("lang").alias("lg")).agg(
@@ -1385,17 +1242,8 @@ def q_stream_attribution(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_attr_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        conv.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
     return (
-        spark.table(name)
+        run_to_memory(conv, "append")
         .groupBy("channel")
         .agg(
             F.count(F.lit(1)).alias("n_conv"),
@@ -1499,16 +1347,7 @@ def q_stream_rfm(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_rfm_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        snaps.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sunk = spark.table(name)
+    sunk = run_to_memory(snaps, "append")
     last = sunk.groupBy(F.col("shard").alias("sh")).agg(
         F.max("n_seen").alias("ns")
     )
@@ -1616,16 +1455,7 @@ def q_stream_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_novelty_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        incs.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sunk = spark.table(name)
+    sunk = run_to_memory(incs, "append")
     return (
         sunk.groupBy("doc_id")
         .agg(
@@ -1754,16 +1584,7 @@ def q_stream_funnel(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_funnel_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        snaps.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sunk = spark.table(name)
+    sunk = run_to_memory(snaps, "append")
     last = sunk.groupBy(F.col("shard").alias("sh")).agg(
         F.max("n_seen").alias("ns")
     )
@@ -1838,16 +1659,7 @@ def q_stream_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_budget_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        snaps.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sunk = spark.table(name)
+    sunk = run_to_memory(snaps, "append")
     # monotone counters: final snapshot per shard = max n_docs row
     final = (
         sunk.groupBy("lang", "source")
@@ -1914,16 +1726,7 @@ def q_stream_daily_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = f"chi_corr_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        snaps.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    sunk = spark.table(name)
+    sunk = run_to_memory(snaps, "append")
     last = sunk.groupBy(F.col("event_type").alias("et")).agg(
         F.max("n_seen").alias("ns")
     )

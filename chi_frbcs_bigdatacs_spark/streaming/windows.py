@@ -20,7 +20,6 @@ partition-parallel state.
 from __future__ import annotations
 
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,7 +30,12 @@ from chi_frbcs_bigdatacs_spark.sources.testdata import (
     normalize_events_ts,
     read_events_raw,
 )
-from chi_frbcs_bigdatacs_spark.streaming.staging import staged_dir
+from chi_frbcs_bigdatacs_spark.streaming.staging import (
+    run_to_memory,
+    staged_dir,
+    stream_files,
+    write_ordered_parts,
+)
 
 
 def _events_stream_from(spark: SparkSession, sf_dir: str, src: str) -> DataFrame:
@@ -41,13 +45,8 @@ def _events_stream_from(spark: SparkSession, sf_dir: str, src: str) -> DataFrame
     and `ts` gets the batch loader's rule (normalize_events_ts): a
     plain TIMESTAMP, value-identical to the batch/oracle reading, which
     watermarks and window() accept where they reject TIMESTAMP_NTZ."""
-    batch = read_events_raw(spark, sf_dir)
-    stream = (
-        spark.readStream.schema(batch.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
-    return normalize_events_ts(stream)
+    schema = read_events_raw(spark, sf_dir).schema
+    return normalize_events_ts(stream_files(spark, schema, src))
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,19 +61,6 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _events_stream_from(spark, sf_dir, src)
 
 
-def _run_to_memory(agg: DataFrame, mode: str = "complete") -> DataFrame:
-    name = f"chi_sink_{uuid.uuid4().hex[:12]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return agg.sparkSession.table(name)
-
-
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_stream(spark, sf_dir)
     agg = (
@@ -83,7 +69,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("hour"), "event_type", "n")
     )
-    return _run_to_memory(agg)
+    return run_to_memory(agg, "complete")
 
 
 STREAM_TUMBLING_SQL = """
@@ -100,7 +86,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
-    return _run_to_memory(agg)
+    return run_to_memory(agg, "complete")
 
 
 # each event belongs to 3 sliding windows: time_bucket minus k*slide
@@ -130,7 +116,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    return _run_to_memory(agg)
+    return run_to_memory(agg, "complete")
 
 
 def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,7 +142,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "bucket"])
         .select("user_id", "event_type", "bucket")
     )
-    return _run_to_memory(keyed, mode="append")
+    return run_to_memory(keyed, "append")
 
 
 STREAM_DEDUP_SQL = """
@@ -189,7 +175,7 @@ def q_stream_join_static(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("w.start").alias("hour"), "c_mktsegment", "n", "value_sum"
         )
     )
-    return _run_to_memory(agg)
+    return run_to_memory(agg, "complete")
 
 
 STREAM_JOIN_STATIC_SQL = """
@@ -279,8 +265,6 @@ def _events_tsorder_src(
     spark: SparkSession, sf_dir: str, n_files: int = N_TS_ORDER_FILES
 ) -> str:
     def build(d: str) -> None:
-        import os
-
         import pandas as pd
 
         df = (
@@ -293,11 +277,9 @@ def _events_tsorder_src(
             .reset_index(drop=True)
         )
         step = -(-len(df) // n_files)
-        base = 1_700_000_000
-        for i in range(n_files):
-            p = f"{d}/part-{i:02d}.parquet"
-            df.iloc[i * step : (i + 1) * step].to_parquet(p, index=False)
-            os.utime(p, (base + i * 60, base + i * 60))
+        write_ordered_parts(
+            d, [df.iloc[i * step : (i + 1) * step] for i in range(n_files)]
+        )
 
     return staged_dir(f"events_tsorder{n_files}", sf_dir, build)
 
@@ -344,7 +326,7 @@ def q_stream_stream_join(
         "click_id",
         (F.unix_micros("cts") - F.unix_micros("vts")).alias("gap_us"),
     )
-    return _run_to_memory(j, mode="append")
+    return run_to_memory(j, "append")
 
 
 STREAM_STREAM_JOIN_SQL = f"""
@@ -389,7 +371,7 @@ def q_stream_sketch_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events_stream_ordered(spark, sf_dir).select(
         "event_type", "user_id"
     )
-    regs = _run_to_memory(hll_registers(ev), mode="complete")
+    regs = run_to_memory(hll_registers(ev), "complete")
     return hll_estimate(regs, load_events(spark, sf_dir))
 
 
@@ -511,8 +493,6 @@ LATE_WM_DELAY_HOURS = 1
 
 def _events_late_src(spark: SparkSession, sf_dir: str) -> str:
     def build(d: str) -> None:
-        import os
-
         import pandas as pd
 
         df = (
@@ -550,11 +530,7 @@ def _events_late_src(spark: SparkSession, sf_dir: str) -> str:
             df[ts >= cut1],  # carries the global max ts -> final watermark
             df[strag],  # the deliberate stragglers, now far behind it
         ]
-        base = 1_700_000_000
-        for i, p in enumerate(parts):
-            fp = f"{d}/part-{i:02d}.parquet"
-            p.to_parquet(fp, index=False)
-            os.utime(fp, (base + i * 60, base + i * 60))
+        write_ordered_parts(d, parts)
 
     return staged_dir("events_late", sf_dir, build)
 
@@ -567,7 +543,7 @@ def q_stream_late_data_accounting(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.end").alias("wend"), "event_type", "n")
     )
-    emitted = _run_to_memory(agg, mode="append")
+    emitted = run_to_memory(agg, "append")
     acc = emitted.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_windows"),
         F.sum("n").cast("long").alias("n_accepted"),
@@ -657,8 +633,6 @@ def _orders_bloom_stream(
     batch = spark.read.parquet(f"{sf_dir}/orders.parquet")
 
     def build(d: str) -> None:
-        import os
-
         import pandas as pd
 
         df = pd.read_parquet(
@@ -666,20 +640,14 @@ def _orders_bloom_stream(
             columns=["o_orderkey", "o_orderpriority"],
         )
         step = -(-len(df) // N_BLOOM_FILES)
-        base = 1_700_000_000
-        for i in range(N_BLOOM_FILES):
-            p = f"{d}/part-{i:02d}.parquet"
-            df.iloc[i * step : (i + 1) * step].to_parquet(p, index=False)
-            os.utime(p, (base + i * 60, base + i * 60))
+        write_ordered_parts(
+            d, [df.iloc[i * step : (i + 1) * step] for i in range(N_BLOOM_FILES)]
+        )
 
     src = staged_src or staged_dir("orders_bloom", sf_dir, build)
     schema = "o_orderkey " + batch.schema["o_orderkey"].dataType.simpleString()
     schema += ", o_orderpriority string"
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src)
-    )
+    return stream_files(spark, schema, src)
 
 
 def q_stream_bloom_build(
@@ -695,7 +663,7 @@ def q_stream_bloom_build(
         .where(F.col("o_orderpriority") == "1-URGENT")
         .select(F.col("o_orderkey").cast("long").alias("k"))
     )
-    bloom = _run_to_memory(bloom_words(keys), mode="complete")
+    bloom = run_to_memory(bloom_words(keys), "complete")
     return bloom_finish(spark, sf_dir, bloom)
 
 

@@ -635,6 +635,42 @@ def test_stateful_stream_runs_one_state_store_per_core(spark):
         assert ops[0]["numShufflePartitions"] == spark.sparkContext.defaultParallelism
 
 
+def test_new_session_gets_the_state_width(spark):
+    """The state width is a builder setting, so a newSession() of the
+    engine's session runs one state-store task per core, not Spark's
+    default 200."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from chi_frbcs_bigdatacs_spark.streaming.windows import _events_stream
+
+    cores = spark.sparkContext.defaultParallelism
+    other = spark.newSession()
+    assert other.conf.get("spark.sql.shuffle.partitions") == str(cores)
+    name = f"chi_width_{uuid.uuid4().hex[:12]}"
+    q = (
+        _events_stream(other, SF_SMALL)
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.window("ts", "1 hour"), "event_type")
+        .count()
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("complete")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+        progress = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+        other.catalog.dropTempView(name)
+    assert progress
+    for p in progress:
+        assert p["stateOperators"][0]["numShufflePartitions"] == cores
+
+
 def test_checkpoint_recovery_restores_state_at_the_state_width(spark, duck, tmp_path):
     """stream_checkpoint_recovery's two phases under the state width:
     both record it in the checkpoint's offset log, the state store has
